@@ -1,233 +1,32 @@
 #!/usr/bin/env python3
-"""Record the text hash of every driver-graded query (fold-in step of the
-grading rotation).
+"""Fold a new CORRECTNESS_r{N}.json into tests/graded_text_hashes.json.
 
-Run this EXACTLY when a round's grades are folded into a GRADED_ROUND_N
-set in registry.py — it snapshots each graded-and-not-superseded query's
-defining text (oracle SQL + Spark-side source + the source of every
-package-local helper in its static call closure) into
-tests/graded_text_hashes.json.  From then on,
-tests/test_registry_oracle.py::test_graded_text_unchanged fails whenever
-a graded query's text changes without its name being moved into
-SUPERSEDED_GREENS (and hence into the next grading window) — the
-rewrite-without-regrade failure mode that created 27 stale greens in
-round 6 (VERDICT r6 "What's wrong" #3).
+This is the whole fold-in: run it once after the newest
+CORRECTNESS file is committed and before any graded query's text is
+edited again.  Names green in that file take their current text hash;
+every other graded name keeps the hash it was recorded with, so a row
+whose text changed and which the newest window did not regrade stays
+superseded and heads the next window.  Grade ages and the superseded set
+are derived from these files at ``registry.ordered_queries()`` time
+(flink_1_12_0_spark/grading.py); nothing else needs editing.
 
-Scope (round 17, VERDICT r16 "Next round" #2 — the mechanism that
-replaces the round-16 stated policy): the hash covers the query's own
-text AND the transitive closure of package-local functions/classes it
-statically references — module-level names, ``module.attr`` access on
-package modules, and function-local ``from X import Y``.  An edit to a
-shared stage helper (e.g. ``_runtime_add_stage``, round 16's case)
-therefore FLIPS the recorded hash of every delegating graded row: the
-stale set is computed, not recalled.  Registration plumbing
-(``registry.query``, ``register_sql``) is excluded — it is structural,
-not semantic.  Edits the closure cannot see (monkey-level dynamic
-dispatch, data files) remain gated by the full-registry sf0.01 sweep
-(scripts/sweep_sf001.py) required green at every snapshot SHA.
-
-Usage:  PYTHONPATH=/root/repo python3 scripts/record_text_hashes.py
+Usage:  python3 scripts/record_text_hashes.py
 """
 
 from __future__ import annotations
 
-import ast
-import hashlib
-import importlib
-import inspect
 import json
 import os
 import sys
-import textwrap
 
-from flink_1_12_0_spark import registry
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-OUT = os.path.join(os.path.dirname(__file__), "..", "tests",
-                   "graded_text_hashes.json")
-
-_PKG = "flink_1_12_0_spark"
-
-#: Registration plumbing whose source is structural boilerplate shared
-#: by every row — including it would make every hash depend on the
-#: decorator's text without adding semantic coverage.  Module-level
-#: exclusion only: a qualname blocklist would silently drop any future
-#: package helper that happened to share a name with the plumbing
-#: (code-review r17).
-_EXCLUDED_MODULES = frozenset({f"{_PKG}.registry"})
-
-
-def _is_local_def(obj) -> bool:  # noqa: ANN001
-    """A function or class defined inside the package (not plumbing)."""
-    if not (inspect.isfunction(obj) or inspect.isclass(obj)):
-        return False
-    mod = getattr(obj, "__module__", "") or ""
-    return mod.startswith(_PKG) and mod not in _EXCLUDED_MODULES
-
-
-def _anchor_package(module_name: str, level: int) -> str | None:
-    """The package an ``ast.ImportFrom`` with ``level`` dots resolves
-    against, for code defined in ``module_name`` — the semantics of
-    importlib's ``_resolve_name`` (a package ``__init__`` anchors at
-    ITSELF for level 1, a plain module at its containing package; a
-    bare ``rsplit(level)`` strips one component too many for packages
-    — code-review r17)."""
-    mod = sys.modules.get(module_name)
-    pkg = getattr(mod, "__package__", None)
-    if pkg is None:
-        pkg = module_name.rsplit(".", 1)[0]
-    parts = pkg.split(".")
-    if level - 1 >= len(parts):
-        return None
-    return ".".join(parts[: len(parts) - (level - 1)])
-
-
-def _import_module(target: str):  # noqa: ANN001
-    if not target.startswith(_PKG):
-        return None
-    try:
-        return importlib.import_module(target)
-    except ImportError:
-        return None
-
-
-def _static_refs(src: str, module_name: str):  # noqa: ANN001
-    """Package-local functions/classes statically referenced by ``src``.
-
-    Resolution order mirrors how the code actually binds names:
-    plain ``Name`` loads against the defining module's globals,
-    ``mod.attr`` against package modules visible in the globals OR
-    bound by a function-local ``import``/``from . import mod`` (local
-    imports never reach module globals — round 16's
-    ``_runtime_add_stage`` imports all its helpers this way), and
-    ``from X import Y`` against the imported module itself, including
-    the ``module=None`` form ``from . import Y`` (code-review r17).
-    """
-    try:
-        tree = ast.parse(textwrap.dedent(src))
-    except SyntaxError:
-        return
-    g = vars(sys.modules[module_name]) if module_name in sys.modules else {}
-    # pre-pass: module objects bound by import statements in this source
-    # (function-local binds are invisible to module globals)
-    local_mods: dict[str, object] = {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for alias in node.names:
-                mod = _import_module(alias.name)
-                if mod is not None:
-                    # 'import a.b.c' binds 'a'; 'as m' binds the leaf
-                    if alias.asname:
-                        local_mods[alias.asname] = mod
-                    else:
-                        top = alias.name.split(".")[0]
-                        top_mod = _import_module(top)
-                        if top_mod is not None:
-                            local_mods.setdefault(top, top_mod)
-        elif isinstance(node, ast.ImportFrom):
-            target = node.module
-            if node.level:
-                pkg = _anchor_package(module_name, node.level)
-                if pkg is None:
-                    continue
-                target = f"{pkg}.{node.module}" if node.module else pkg
-            if target is None:
-                continue
-            base = _import_module(target)
-            if base is None:
-                continue
-            for alias in node.names:
-                obj = getattr(base, alias.name, None)
-                if obj is None:
-                    obj = _import_module(f"{target}.{alias.name}")
-                if inspect.ismodule(obj):
-                    local_mods[alias.asname or alias.name] = obj
-                elif obj is not None and _is_local_def(obj):
-                    yield obj
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-            obj = g.get(node.id)
-            if obj is not None and _is_local_def(obj):
-                yield obj
-        elif isinstance(node, ast.Attribute) and isinstance(node.value,
-                                                            ast.Name):
-            base = g.get(node.value.id)
-            if not inspect.ismodule(base):
-                base = local_mods.get(node.value.id)
-            if inspect.ismodule(base) and base.__name__.startswith(_PKG):
-                obj = getattr(base, node.attr, None)
-                if obj is not None and _is_local_def(obj):
-                    yield obj
-
-
-def helper_closure(fn) -> dict[str, str]:  # noqa: ANN001
-    """{"module.qualname": source} for every package-local helper in
-    ``fn``'s transitive static call closure (``fn`` itself excluded —
-    its source is the own-text component of the hash)."""
-    root_key = (fn.__module__, fn.__qualname__)
-    out: dict[str, str] = {}
-    seen: set[tuple[str, str]] = {root_key}
-    stack = [fn]
-    while stack:
-        obj = stack.pop()
-        try:
-            src = inspect.getsource(obj)
-        except (OSError, TypeError):
-            continue
-        for ref in _static_refs(src, obj.__module__):
-            key = (ref.__module__, ref.__qualname__)
-            if key in seen:
-                continue
-            seen.add(key)
-            try:
-                out[f"{key[0]}.{key[1]}"] = inspect.getsource(ref)
-            except (OSError, TypeError):
-                out[f"{key[0]}.{key[1]}"] = f"<unsourcable:{key}>"
-            stack.append(ref)
-    return out
-
-
-def query_text(name: str) -> str:
-    """The graded artifact's defining text: oracle SQL, the Spark-side
-    definition (the SQL string for register_sql queries — their closure
-    is shared boilerplate — else the function source), and the sorted
-    sources of the function's package-local helper closure."""
-    fn = registry.QUERIES[name]
-    if fn.__qualname__.endswith("register_sql.<locals>._fn"):
-        spark_side = fn.__defaults__[0]
-        helpers = ""
-    else:
-        try:
-            spark_side = inspect.getsource(fn)
-        except (OSError, TypeError):
-            spark_side = f"<unsourcable:{fn.__module__}.{fn.__qualname__}>"
-        closure = helper_closure(fn)
-        helpers = "\x00".join(
-            f"{k}\x01{closure[k]}" for k in sorted(closure))
-    return (registry.ORACLES.get(name, "") + "\x00" + spark_side
-            + "\x00" + helpers)
-
-
-def current_hashes() -> dict[str, str]:
-    registry.load_all()
-    graded = (
-        registry.GRADED_ROUNDS_1_2 | registry.GRADED_ROUND_3
-        | registry.GRADED_ROUND_4 | registry.GRADED_ROUND_5_6
-        | registry.GRADED_ROUND_8 | registry.GRADED_ROUND_9
-        | registry.GRADED_ROUND_10 | registry.GRADED_ROUND_11
-        | registry.GRADED_ROUND_12 | registry.GRADED_ROUND_13
-        | registry.GRADED_ROUND_14 | registry.GRADED_ROUND_15
-        | registry.GRADED_ROUND_16 | registry.GRADED_ROUND_17
-    ) - registry.SUPERSEDED_GREENS
-    return {
-        name: hashlib.sha256(query_text(name).encode()).hexdigest()[:16]
-        for name in sorted(graded)
-        if name in registry.QUERIES
-    }
-
+from flink_1_12_0_spark import grading  # noqa: E402
 
 if __name__ == "__main__":
-    hashes = current_hashes()
-    with open(os.path.abspath(OUT), "w") as f:
+    hashes = grading.fold_in()
+    with open(grading.HASHES_PATH, "w") as f:
         json.dump(hashes, f, indent=0, sort_keys=True)
         f.write("\n")
-    print(f"recorded {len(hashes)} graded-query text hashes -> {OUT}")
+    print(f"recorded {len(hashes)} graded-query text hashes -> "
+          f"{grading.HASHES_PATH}")

@@ -121,7 +121,7 @@ def test_first_seen_default_shards_floor_1024(spark):
     """r18: the shard default is max(1024, 8 x defaultParallelism) —
     the r17 floor of 64 put local[32] at 256 shards, which the driver's
     window and this round's fresh-session A/B both read as a loss on
-    the full stream_lsh_dedup row (scripts/ab_lsh_shards.py)."""
+    the full stream_lsh_dedup row (receipt in OPTIMIZATION_r18.md)."""
     par = spark.sparkContext.defaultParallelism
     assert max(1024, par * 8) >= 1024
 

@@ -150,49 +150,36 @@ def test_no_order_dependent_float_outputs():
 
 
 def test_graded_text_unchanged():
-    """Rewrite-without-regrade guard (VERDICT r6 "What's wrong" #3: round
-    6 rewrote 35 queries' text but regraded only the 8 inside the old
-    window, leaving 27 driver-green rows grading superseded text).
+    """Rewrite-without-regrade guard (round 6 rewrote 35 queries' text but
+    regraded only the 8 inside the old window, leaving 27 green
+    rows grading superseded text).
 
     tests/graded_text_hashes.json snapshots each graded query's defining
     text (oracle SQL + Spark side + the transitive package-local helper
-    closure, round 17) at fold-in time (scripts/record_text_hashes.py).
-    Changing a graded query's text — its own source OR a helper it
-    statically reaches — now requires moving its name into
-    registry.SUPERSEDED_GREENS — which ordered_queries() sorts into the
-    next grading window — before this test passes again.  After the
-    regrade, fold the green in and re-run the recording script.
+    closure) at fold-in time (scripts/record_text_hashes.py).  Changing a
+    graded query's text — its own source OR a helper it statically
+    reaches — makes it superseded, and ordered_queries() must then place
+    it ahead of every name whose grade still holds, so the next grading
+    window re-proves it.
 
     SCOPE: the closure walk (tests/test_text_hash_closure.py pins it)
     sees static references only — dynamic dispatch and data files stay
-    out of reach.  Those are gated by the OTHER half of the discipline:
-    the full-registry sf0.01 driver-mirror sweep
-    (scripts/sweep_sf001.py) that must run green at every snapshot SHA,
-    which re-executes every graded query's current implementation
-    against its oracle at the driver's own scale."""
-    import json
+    out of reach.  Those are gated by the full-registry sf0.01
+    oracle sweep (scripts/sweep_sf001.py), which re-executes every
+    graded query's current implementation against its oracle."""
+    from flink_1_12_0_spark import grading
 
-    from scripts.record_text_hashes import current_hashes
-
-    path = os.path.join(os.path.dirname(__file__), "graded_text_hashes.json")
-    with open(path) as f:
-        recorded = json.load(f)
-    current = current_hashes()
-    stale = sorted(
-        n for n in recorded
-        if n in current and current[n] != recorded[n]
-    )
-    assert not stale, (
-        "graded queries' text changed without a regrade slot — move these "
-        "names into registry.SUPERSEDED_GREENS (next grading window) or, "
-        "if the driver has since graded the new text, fold the grade in "
-        f"and re-run scripts/record_text_hashes.py: {stale}"
-    )
-    unrecorded = sorted(n for n in current if n not in recorded)
-    assert not unrecorded, (
-        "queries are marked graded-current but have no recorded text hash "
-        f"— run scripts/record_text_hashes.py at fold-in time: {unrecorded}"
-    )
+    recorded = grading.recorded_hashes()
+    current = grading.current_hashes()
+    changed = {n for n in current if recorded.get(n) != current[n]}
+    ordered = list(registry.ordered_queries())
+    holding = [i for i, n in enumerate(ordered)
+               if n in current and n not in changed]
+    late = sorted(n for n in changed if holding
+                  and ordered.index(n) > holding[0])
+    assert not late, (
+        "graded queries whose text changed since their grade sort behind "
+        f"a still-valid grade: {late}")
 
 
 def test_every_oracle_nonempty(duck):

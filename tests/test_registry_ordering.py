@@ -2,49 +2,40 @@
 
 from __future__ import annotations
 
-from flink_1_12_0_spark import registry
+import json
+
+import pytest
+
+from flink_1_12_0_spark import grading, registry
 
 
 def setup_module():
     registry.load_all()
 
 
-def test_priority_names_all_registered():
-    """A typo in QUERY_PRIORITY silently drops the query from the grading
-    window (unregistered names are skipped by design for planning) — now
-    that every planned query exists, the lists must agree exactly."""
-    missing = [n for n in registry.QUERY_PRIORITY if n not in registry.QUERIES]
-    assert not missing, f"QUERY_PRIORITY names not registered: {missing}"
+@pytest.fixture(scope="module")
+def derived():
+    """(grade ages, superseded set) as ordered_queries() derives them."""
+    ages = grading.grade_ages()
+    stale = grading.superseded(grading.current_hashes(),
+                               grading.recorded_hashes())
+    return ages, stale
 
 
-def _graded_current() -> frozenset[str]:
-    """Names with a driver-green grade on their CURRENT text."""
-    return (
-        registry.GRADED_ROUNDS_1_2 | registry.GRADED_ROUND_3
-        | registry.GRADED_ROUND_4 | registry.GRADED_ROUND_5_6
-        | registry.GRADED_ROUND_8 | registry.GRADED_ROUND_9
-        | registry.GRADED_ROUND_10 | registry.GRADED_ROUND_11
-        | registry.GRADED_ROUND_12 | registry.GRADED_ROUND_13
-        | registry.GRADED_ROUND_14 | registry.GRADED_ROUND_15
-        | registry.GRADED_ROUND_16 | registry.GRADED_ROUND_17
-    ) - registry.SUPERSEDED_GREENS
+def _debt(ages, stale) -> set[str]:
+    return {n for n in registry.QUERIES if n not in ages or n in stale}
 
 
-def test_grading_window_debt_first():
-    """The driver grades queries()[:50].  The standing invariant (round-7
-    form): every slot goes first to the verification DEBT — names never
-    driver-graded plus SUPERSEDED_GREENS (text rewritten after their
-    grade) — and only once ALL debt is inside the window may spare slots
-    re-prove genuinely-graded names (oldest greens re-verified for free).
-    Round 6 violated the first half (it re-graded 42 already-green rows
-    while 32 debt names sat outside the window); this test makes that
-    unshippable."""
+def test_grading_window_debt_first(derived):
+    """The grader takes queries()[:50].  Every slot goes first to the
+    verification DEBT — names never graded plus superseded greens
+    (text rewritten after their grade) — and only once ALL debt is inside
+    the window may spare slots re-prove genuinely-graded names."""
     ordered = list(registry.ordered_queries())
     window = ordered[:50]
-    graded = _graded_current()
-    debt = [n for n in registry.QUERIES if n not in graded]
+    debt = _debt(*derived)
     if len(debt) >= 50:
-        spent_on_green = [n for n in window if n in graded]
+        spent_on_green = [n for n in window if n not in debt]
         assert not spent_on_green, (
             f"window wastes slots on already-green while debt overflows: "
             f"{spent_on_green}"
@@ -56,26 +47,16 @@ def test_grading_window_debt_first():
     assert sorted(ordered) == sorted(registry.QUERIES)
 
 
-def test_priority_list_is_all_debt():
-    """Every explicitly prioritized name must BE debt (never-graded or
-    superseded) — a genuinely-graded name in QUERY_PRIORITY would silently
-    burn a slot on an already-proven row."""
-    graded = _graded_current()
-    wasted = [n for n in registry.QUERY_PRIORITY if n in graded]
-    assert not wasted, f"QUERY_PRIORITY contains already-green names: {wasted}"
-
-
-def test_superseded_greens_sort_ahead_of_graded_tail():
+def test_superseded_greens_sort_ahead_of_graded_tail(derived):
     """A green row that grades rewritten text must not hide in the graded
     tail: superseded names not already in the window must come before any
     genuinely-graded query, so they head the NEXT round's window."""
+    _, stale = derived
     ordered = list(registry.ordered_queries())
     window = set(ordered[:50])
-    pending = [n for n in registry.SUPERSEDED_GREENS if n not in window]
+    pending = [n for n in stale if n not in window]
     tail = ordered[50:]
-    assert tail[: len(pending)] == sorted(
-        pending, key=tail.index
-    ) and set(tail[: len(pending)]) == set(pending), (
+    assert set(tail[: len(pending)]) == set(pending), (
         f"superseded greens not at the head of the post-window tail: {tail[:8]}"
     )
 
@@ -88,39 +69,23 @@ def test_every_query_has_oracle_or_is_documented():
     assert not no_oracle, f"queries without oracle: {no_oracle}"
 
 
-def test_round18_window_manifest():
-    """The round-18 grading window is a commitment (COVERAGE.md manifest):
-    debt first (superseded regrades + this round's new queries), then the
-    family-coverage pins (the CEP slot, VERDICT r14 #6), then the stalest
-    greens strictly oldest-grade-first — a registration-order change must
-    not silently reshuffle what the driver grades before CORRECTNESS_r18
-    lands.  After the r17 fold-in the stalest cohort is the 42-name
-    round-11 remainder (setops, source roundtrips, stream window/join
-    families, dedup keep-first/last); the window drains as much of it as
-    the debt ahead of it leaves room for, then the round-12 head."""
+def test_window_is_debt_then_pins_then_oldest_grade(derived):
+    """The standing window policy, free of any round's manifest: debt
+    first (superseded before never-graded), then the family-coverage pins
+    in list order, then the graded names with non-decreasing grade age,
+    ties in registration order."""
+    ages, stale = derived
     ordered = list(registry.ordered_queries())
-    debt = _round18_new() | registry.SUPERSEDED_GREENS
-    assert debt <= set(ordered[: len(debt)])
-    # pins come right after debt, in list order
+    debt = _debt(ages, stale)
+    head = ordered[: len(debt)]
+    assert set(head) == debt
+    n_stale = len(stale & set(registry.QUERIES))
+    assert set(head[:n_stale]) == stale & set(registry.QUERIES)
     pins = [n for n in registry.FAMILY_REGRADE_PINS if n not in debt]
     assert ordered[len(debt): len(debt) + len(pins)] == pins
-    # the remaining slots drain strictly oldest-grade-first: the age keys
-    # of the post-pin ordering must be non-decreasing, so no newer green
-    # can jump the queue past a staler one
-    keys = [registry._grade_age_key(n)
-            for n in ordered[len(debt) + len(pins):]]
+    tail = ordered[len(debt) + len(pins):]
+    keys = [(ages[n], list(registry.QUERIES).index(n)) for n in tail]
     assert keys == sorted(keys), "graded tail not oldest-grade-first"
-    # the round-11 cohort (age key 9 — names whose NEWEST grade is r11)
-    # heads the stale regrades; every post-pin window slot goes to it
-    # until it drains (or the window ends)
-    r11_key = registry._grade_age_key("stream_dedup_first")
-    start = len(debt) + len(pins)
-    n_r11 = sum(1 for n in ordered[start:]
-                if registry._grade_age_key(n) == r11_key)
-    head_end = min(50, start + n_r11)
-    head_keys = {registry._grade_age_key(n) for n in ordered[start:head_end]}
-    assert head_keys <= {r11_key}, (
-        f"non-r11 names inside the r11 drain slots: {head_keys}")
 
 
 def test_family_pins_registered_and_short():
@@ -132,8 +97,58 @@ def test_family_pins_registered_and_short():
     assert len(registry.FAMILY_REGRADE_PINS) <= 2
 
 
-def _round18_new() -> frozenset[str]:
-    return frozenset(
-        n for n in registry.QUERIES
-        if n not in _graded_current() and n not in registry.SUPERSEDED_GREENS
-    )
+def test_window_order_policy_on_synthetic_state():
+    """The same policy on a state that has every class of name (the live
+    registry may have no debt at all): superseded, never graded, pin,
+    then grade age with registration order breaking ties; a pin that is
+    itself debt keeps its debt slot."""
+    pin = registry.FAMILY_REGRADE_PINS[0]
+    names = ["g12", pin, "g3", "never", "stale", "g3b"]
+    ages = {"g12": 12, pin: 15, "g3": 3, "stale": 9, "g3b": 3}
+    assert registry.window_order(names, ages, {"stale"}) == [
+        "stale", "never", pin, "g3", "g3b", "g12"]
+    assert registry.window_order(["never", pin, "g3"], {"g3": 3}, set()) == [
+        "never", pin, "g3"]
+
+
+def test_green_entry_advances_grade_age_and_red_does_not(tmp_path):
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "spark_rows": 1, "oracle_rows": 1, "err": None}
+    wrong = dict(green, hash_match=False, oracle_rows=2)
+    crashed = dict(green, rows_match=None, schema_match=None,
+                   hash_match=None, err="Traceback ...")
+
+    def write(rnd: int, rows: dict) -> None:
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps(rows))
+
+    write(3, {"a": green, "b": green, "c": crashed})
+    write(7, {"a": green, "b": wrong, "d": crashed})
+    write(12, {"c": green, "b": crashed})
+    ages = grading.grade_ages(grading.correctness_files(str(tmp_path)))
+    assert ages == {"a": 7, "b": 3, "c": 12}
+
+
+@pytest.fixture
+def fresh_window():
+    """Drop the per-process window cache after the test patched its inputs."""
+    yield
+    registry._window.cache_clear()
+
+
+def test_recorded_hash_mismatch_heads_the_window(derived, tmp_path,
+                                                 monkeypatch, fresh_window):
+    """A graded name whose recorded hash no longer matches its text is
+    superseded: ordered_queries() moves it from the graded tail to the
+    head of the window, behind nothing but other superseded names."""
+    _, stale = derived
+    name = list(registry.ordered_queries())[-1]
+    assert name not in stale
+    recorded = grading.recorded_hashes()
+    recorded[name] = "0" * 16
+    path = tmp_path / "graded_text_hashes.json"
+    path.write_text(json.dumps(recorded))
+    monkeypatch.setattr(grading, "HASHES_PATH", str(path))
+    registry._window.cache_clear()
+    after = list(registry.ordered_queries())
+    assert set(after[: after.index(name)]) <= stale

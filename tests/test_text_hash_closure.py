@@ -1,18 +1,19 @@
-"""Helper-closure text hashing (VERDICT r16 "Next round" #2).
+"""Graded-text hashing (flink_1_12_0_spark.grading).
 
 Round 16 re-staled helper-delegating graded rows BY POLICY: the text
 hash covered only the query function's own source, so an edit to a
 shared stage helper (``_runtime_add_stage``) re-staled its delegating
-rows only because the round-closing review remembered to.  Round 17
-mechanizes it: scripts/record_text_hashes.py hashes each row's
-transitive package-local helper closure, so a shared-helper edit
-COMPUTES its stale set.  These tests pin the mechanism:
+rows only because the round-closing review remembered to.  The hash now
+covers each row's transitive package-local helper closure, so a
+shared-helper edit COMPUTES its stale set.  These tests pin the mechanism:
 
 * mutating a helper's source flips the hash of every delegating row;
 * mutating an UNRELATED helper flips nothing (negative control);
 * on the real registry, the rows round 16 re-staled by hand do carry
   their shared helper in the hash input — the policy case is now the
-  mechanism's case.
+  mechanism's case;
+* the SQL a closure-registered row binds (``register_sql``,
+  ``_sql_pair``) is part of its hash.
 """
 
 from __future__ import annotations
@@ -20,19 +21,11 @@ from __future__ import annotations
 import hashlib
 import importlib
 import linecache
-import os
 import sys
 import textwrap
 
-# scripts/ is importable from the repo root, which conftest.py already
-# puts on sys.path — derive it from __file__ instead of hardcoding a
-# checkout location that could shadow the repo under review with a
-# stale copy (code-review r17)
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from scripts.record_text_hashes import helper_closure, query_text  # noqa: E402
-
-from flink_1_12_0_spark import registry  # noqa: E402
+from flink_1_12_0_spark import grading, registry
+from flink_1_12_0_spark.grading import helper_closure, query_text
 
 _MOD_TEMPLATE = '''\
 """Synthetic fixture module for the closure-hash mechanism test."""
@@ -139,7 +132,7 @@ def test_static_refs_covers_all_import_binding_forms():
     reopened rewrite-without-regrade hole.  Each source below binds
     operators.sketches.bloom_build a different way; the walk must
     surface it every time."""
-    from scripts.record_text_hashes import _static_refs
+    from flink_1_12_0_spark.grading import _static_refs
 
     from flink_1_12_0_spark.operators.sketches import bloom_build
 
@@ -180,25 +173,29 @@ def test_static_refs_covers_all_import_binding_forms():
 
 
 def test_recorded_hashes_current():
-    """The committed graded_text_hashes.json must be regenerated whenever
-    the hashing mechanism itself changes — otherwise the guard compares
-    apples to oranges on its first post-change run.  Mid-round, a
-    recorded name may legitimately drop out of current_hashes() ONLY by
-    sitting in SUPERSEDED_GREENS (its text changed, its regrade is
-    queued); anything else recorded-but-not-current is a leak."""
-    import json
-    import os
-
-    from scripts.record_text_hashes import current_hashes
-
+    """The committed graded_text_hashes.json is a fold-in of the current
+    registry: every entry names a registered query that some committed
+    CORRECTNESS file graded green, and holds a text hash.  A renamed or
+    deleted query leaves an orphan here until the next fold-in drops it."""
     registry.load_all()
-    path = os.path.join(os.path.dirname(__file__), "graded_text_hashes.json")
-    with open(path) as f:
-        recorded = json.load(f)
-    current = current_hashes()
-    mismatched = {n for n in current
-                  if n not in recorded or recorded[n] != current[n]}
-    assert not mismatched, mismatched
-    orphans = {n for n in recorded if n not in current
-               and n not in registry.SUPERSEDED_GREENS}
+    recorded = grading.recorded_hashes()
+    orphans = sorted(set(recorded) - grading.graded())
     assert not orphans, orphans
+    malformed = sorted(n for n, h in recorded.items()
+                       if len(h) != 16 or set(h) - set("0123456789abcdef"))
+    assert not malformed, malformed
+
+
+def test_sql_pair_text_change_flips_its_hash(monkeypatch):
+    """A row registered through ``_sql_pair`` binds its Spark SQL as the
+    ``_s`` default of a shared ``_fn``; editing that SQL must flip the
+    row's hash (and only that row's), like a ``register_sql`` edit does."""
+    registry.load_all()
+    name, other = "sim_ann_recall_ivfadc", "sim_cosine_topk"
+    fn = registry.QUERIES[name]
+    assert fn.__qualname__ == "_sql_pair.<locals>._fn"
+    before = {n: grading.text_hash(n) for n in (name, other)}
+    (sql,) = fn.__defaults__
+    monkeypatch.setattr(fn, "__defaults__", (sql + " LIMIT 1",))
+    assert grading.text_hash(name) != before[name]
+    assert grading.text_hash(other) == before[other]
