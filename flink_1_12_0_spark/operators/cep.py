@@ -16,11 +16,11 @@ Spark has NO pattern-matching primitive.  Design:
   sequence scan is linear with small backtracking windows (quantifiers are
   bounded by WITHIN); per-key sequences shard across executors, so 100 TB
   scales by key cardinality like every keyed operator here.
-- streaming: same matcher over a per-key state buffer
-  (``applyInPandasWithState``).  AFTER MATCH SKIP PAST LAST ROW only
-  (overlapping modes would re-emit across batches); WITHIN bounds the
-  buffer exactly like the reference's NFA state cleanup — unmatched
-  prefixes older than the horizon are pruned.
+- streaming: same matcher over a per-key state buffer held by
+  ``streaming.stateful.sharded_keyed_process``.  AFTER MATCH SKIP PAST
+  LAST ROW only (overlapping modes would re-emit across batches); WITHIN
+  bounds the buffer exactly like the reference's NFA state cleanup —
+  unmatched prefixes older than the horizon are pruned.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 
 @dataclass
@@ -992,40 +991,19 @@ def match_recognize_stream(
             "class as PREV/NEXT navigation in streaming MATCH_RECOGNIZE)"
         )
 
+    from flink_1_12_0_spark.streaming.stateful import sharded_keyed_process
+
     partition_by = list(partition_by)
     order_by = list(order_by)
     data_cols = [c for c in sdf.columns if c not in partition_by]
-    col_types = dict(sdf.dtypes)
-    # typed-struct state (not a JSON blob): one ARRAY per buffered column —
-    # Arrow moves the buffers without a per-batch encode/parse of the whole
-    # state string; timestamps ride as int64 epoch-nanos for exact round
-    # trips
-    _ts_types = ("timestamp", "timestamp_ntz")
-    state_schema = ", ".join(
-        f"`{c}` array<bigint>" if col_types[c] in _ts_types
-        else f"`{c}` array<{col_types[c]}>"
-        for c in data_cols
-    )
 
     def fn(key, pdfs, state):
         import pandas as pd
 
-        frames = []
-        if state.exists:
-            vals = state.get
-            data = {}
-            for c, v in zip(data_cols, vals):
-                col = list(v) if v is not None else []
-                if col_types[c] in _ts_types:
-                    data[c] = pd.to_datetime(pd.Series(col, dtype="int64"))
-                else:
-                    data[c] = col
-            restored = pd.DataFrame(data)
-            if not restored.empty:
-                frames.append(restored)
-        for p in pdfs:
-            if not p.empty:
-                frames.append(p[data_cols])
+        # state: the key's unconsumed buffer as a pandas frame of the data
+        # columns, in the dtypes the batches carried
+        held = state.get if state.exists else None
+        frames = [f[data_cols] for f in (held, *pdfs) if f is not None and not f.empty]
         if not frames:
             return
         pdf = (
@@ -1043,17 +1021,11 @@ def match_recognize_stream(
         if not keep.empty:
             es = keep[ts_col].astype("int64").to_numpy() / 1e9
             keep = keep[es >= horizon]
-        state.update(tuple(
-            keep[c].astype("datetime64[ns]").astype("int64").tolist()
-            if col_types[c] in _ts_types else keep[c].tolist()
-            for c in data_cols
-        ))
+        state.update(keep.reset_index(drop=True))
         if out:
             yield pd.DataFrame(out)
 
-    return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
+    return sharded_keyed_process(sdf, partition_by, fn, out_schema)
 
 
 def _and_not_next_guard(base: Callable, anchor: str, neg: Callable) -> Callable:

@@ -254,7 +254,8 @@ def run_to_memory(
 
     This is the bounded-execution harness: all currently-available input is
     processed and the query stops — the streaming analog of a batch run,
-    which is what makes streaming operators oracle-checkable.
+    which is what makes streaming operators oracle-checkable.  Raises
+    TimeoutError when the drain does not finish within ``timeout_s``.
 
     Retention note (ADVICE r13): the drained result is pinned as
     ``localCheckpoint(eager=True)`` blocks in executor storage for the
@@ -265,33 +266,20 @@ def run_to_memory(
     released; callers that drain many large results should
     ``.unpersist()`` each drained frame after consuming it.
     """
-    import shutil
-
     name = f"mem_sink_{next(_mem_counter)}"
-    ckpt = tempfile.mkdtemp(prefix="sg_ckpt_")
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        q.stop()
-        spark = sdf.sparkSession
-        out = spark.table(name)
+
+    def materialize():
+        out = sdf.sparkSession.table(name)
         # materialize before the checkpoint dir vanishes / table unregisters —
         # JVM-side (localCheckpoint) rather than a collect+createDataFrame
         # roundtrip through the Python driver: the roundtrip cost is O(result)
         # in Python and dominated large drains (stream_bm25_route_inverted's
         # ~300k routed rows: 9.6 s -> 7.5 s when switched, round 13)
-        out = out.localCheckpoint(eager=True) if out.schema.fields else out
-    finally:
-        # state-store maintenance threads may still be flushing — tolerate
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        return out.localCheckpoint(eager=True) if out.schema.fields else out
+
+    return _drain_available_now(
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        timeout_s, "run_to_memory", materialize)
 
 
 def run_to_stage(
@@ -334,28 +322,38 @@ def run_foreach_batch(
 ) -> None:
     """``foreachBatch`` harness — the escape hatch for sinks Spark lacks
     natively (JDBC upsert, MERGE targets, two-phase commit analogs;
-    reference TwoPhaseCommitSinkFunction.java / upsert-kafka)."""
+    reference TwoPhaseCommitSinkFunction.java / upsert-kafka).  Raises
+    TimeoutError when the drain does not finish within ``timeout_s``."""
+    _drain_available_now(
+        sdf.writeStream.foreachBatch(fn).outputMode(output_mode),
+        timeout_s, "run_foreach_batch")
+
+
+def _drain_available_now(writer, timeout_s, caller: str, finish=None):
+    """Start ``writer`` with an ``availableNow`` trigger on a fresh
+    checkpoint, wait up to ``timeout_s`` and stop it; return
+    ``finish()`` (run before the checkpoint is deleted) or None.
+
+    Raises TimeoutError when the stream did not finish: a timed-out drain
+    has committed only a PREFIX of its batches, and returning as if
+    complete would hand the caller a silently partial result."""
     import shutil
 
     ckpt = tempfile.mkdtemp(prefix="sg_ckpt_")
     try:
         q = (
-            sdf.writeStream.foreachBatch(fn)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
+            writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
         done = q.awaitTermination(timeout_s)
         q.stop()
         if not done:
-            # a timed-out drain has committed only a PREFIX of its
-            # batches — returning as if complete would hand the caller
-            # a silently partial stage/sink (ADVICE r17)
             raise TimeoutError(
-                f"run_foreach_batch: stream did not finish within "
-                f"{timeout_s}s")
+                f"{caller}: stream did not finish within {timeout_s}s")
+        return finish() if finish else None
     finally:
+        # state-store maintenance threads may still be flushing — tolerate
         shutil.rmtree(ckpt, ignore_errors=True)
 
 

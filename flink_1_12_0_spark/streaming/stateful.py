@@ -18,14 +18,18 @@ flink-streaming-java .../api/functions/KeyedProcessFunction.java:52):
 
 Design notes:
 - State crosses micro-batches; each operator emits in ``update`` mode
-  (changed results only).  Payload rows that must be re-emitted later
-  (Top-N) are kept in state as JSON with timestamps as ISO strings and
-  rebuilt with dtype coercion on emission.
-- Everything is per-key and Arrow-batched: at 1000 executors state shards
-  by ``groupBy`` key across the state store (RocksDB-capable); no driver
-  participation.  The pandas work per key per batch is O(buffer) with
-  small buffers (top-k, time-range) — the same asymptotics as the
-  reference's per-key state maps.
+  (changed results only).
+- One keyed-state path: every built-in keyed operator is a per-key
+  ``fn(key, pdf_iter, state)`` run by :func:`sharded_keyed_process`,
+  which groups keys into hash shards (Flink's key groups, VLDB'17) and
+  keeps each key's state as one pickled native Python/pandas value
+  inside its shard's state row.  The shuffle distributes by shard across
+  executors; no driver participation.  The pandas work per key per batch
+  is O(buffer) with small buffers (top-k, time-range) — the same
+  asymptotics as the reference's per-key state maps.
+  :func:`keyed_process` (user schema and timeouts) and the vectorized
+  per-shard fns of the first-seen flag and the rule gate stay on the raw
+  surface.
 - Event-time correctness across batches relies on the upstream watermark
   bounding disorder, exactly like the reference's
   RowTimeRangeBoundedPrecedingFunction cleanup timer.
@@ -47,8 +51,8 @@ def _schema_of(df: DataFrame, cols: Sequence[str]) -> str:
 
 
 def _state_arr_type(dtype: str) -> str:
-    """Element type for a typed-state array holding a column of Spark
-    dtype ``dtype``: timestamps as int64 nanos (order-preserving),
+    """Spark type of a column of Spark dtype ``dtype`` after
+    :func:`_state_encode`: timestamps as int64 nanos (order-preserving),
     integrals as bigint, strings/booleans native, everything else
     double."""
     if dtype in _TS_TYPES:
@@ -63,13 +67,13 @@ def _state_arr_type(dtype: str) -> str:
 
 
 def _state_encode(series, dtype: str):
-    """Encode a pandas column for a :func:`_state_arr_type` array.
+    """Encode a pandas column as the values an event buffer holds.
 
-    Null-safe: NaN/NaT/None payload values encode as None (Spark state
-    arrays hold nulls natively) rather than raising on integral columns
-    or silently encoding NaT as INT64_MIN epoch-ns.  Non-null columns
-    keep the plain-int64 fast path — object arrays sort and transfer
-    slower, so the null path only engages when a null is present."""
+    Null-safe: NaN/NaT/None payload values encode as None rather than
+    raising on integral columns or silently encoding NaT as INT64_MIN
+    epoch-ns.  Non-null columns keep the plain-int64 fast path — object
+    arrays sort slower, so the null path only engages when a null is
+    present."""
     if dtype in _TS_TYPES:
         if series.isna().any():
             enc = series.astype("int64").astype("Int64").mask(series.isna())
@@ -85,35 +89,16 @@ def _state_encode(series, dtype: str):
     return series.astype(float)
 
 
-def _state_scalar(v, dtype: str):
-    """Encode one cell for a scalar state column typed by
-    :func:`_state_arr_type`: timestamps as exact int64 epoch-ns (float
-    seconds have only ~0.4 µs resolution at epoch magnitude), integrals
-    as int, strings/booleans native, everything else float.  Nulls encode
-    as None (order them with :func:`_null_last_key`)."""
-    import pandas as pd
-
-    if v is None or v is pd.NaT or (isinstance(v, float) and v != v):
-        return None
-    if dtype in _TS_TYPES:
-        return int(pd.Timestamp(v).value)
-    if dtype in ("bigint", "int", "smallint", "tinyint"):
-        return int(v)
-    if dtype in ("string", "boolean"):
-        return v
-    return float(v)
-
-
 def _null_last_key(row):
     """Ascending sort key over an (es, tie, val) row that tolerates a
-    missing tiebreak: None AND float NaN order AFTER every real value —
+    missing tiebreak: None, NaN AND NaT order AFTER every real value —
     matching the ``na_position='last'`` default of the in-batch pandas
     sort — instead of raising TypeError (None is unordered against
     str/int) or silently producing an intransitive comparator (NaN is
     neither < nor > any float, so list.sort would leave NaN-tied rows
     wherever they started, batching-dependent)."""
     tie = row[1]
-    missing = tie is None or (isinstance(tie, float) and tie != tie)
+    missing = tie is None or tie != tie
     return (row[0], missing, 0 if missing else tie, *row[2:])
 
 
@@ -125,47 +110,32 @@ def dedup_keep_last(
     Emits a key's row whenever its winner changes (update semantics —
     the upsert-changelog analog of Flink's -U/+U retraction pairs).
 
-    State holds (order, tiebreak) in their NATIVE types — the old
-    double/double encoding collapsed µs-spaced timestamps (float-seconds
-    resolution at epoch magnitude is ~0.4 µs) and raised on string
-    tiebreaks, the same defect class ADVICE r5 (b) flagged on the count
-    windows.
+    State holds the winner's (order, tiebreak) as the values the batch
+    carried, so µs-spaced timestamps and string tiebreaks compare
+    exactly (ADVICE r5 (b): a double/double encoding collapsed the one
+    and raised on the other).
     """
-    keys = list(keys)
     out_cols = list(sdf.columns)
-    out_schema = _schema_of(sdf, out_cols)
-    d = dict(sdf.dtypes)
-    ord_t, tie_t = _state_arr_type(d[order_col]), _state_arr_type(d[tiebreak])
-    state_schema = f"ord {ord_t}, tie {tie_t}"
 
     def fn(key, pdfs, state) -> Iterator:
-        best_ord, best_tie = state.get if state.exists else (None, None)
+        best = state.get if state.exists else None
         best_row = None
         for pdf in pdfs:
-            if pdf.empty:
-                continue
             # a null order value cannot be ranked — drop those rows (the
             # pandas sort would park them last and iloc[-1] would crown a
             # row with no event time)
             pdf = pdf[pdf[order_col].notna()]
             if pdf.empty:
                 continue
-            pdf = pdf.sort_values([order_col, tiebreak], kind="mergesort")
-            cand = pdf.iloc[-1]
-            o = _state_scalar(cand[order_col], d[order_col])
-            t = _state_scalar(cand[tiebreak], d[tiebreak])
-            if best_ord is None or _null_last_key((o, t)) > _null_last_key(
-                (best_ord, best_tie)
-            ):
-                best_ord, best_tie, best_row = o, t, cand
+            cand = pdf.sort_values([order_col, tiebreak], kind="mergesort").iloc[-1]
+            o = (cand[order_col], cand[tiebreak])
+            if best is None or _null_last_key(o) > _null_last_key(best):
+                best, best_row = o, cand
         if best_row is not None:
-            state.update((best_ord, best_tie))
+            state.update(best)
             yield best_row.to_frame().T[out_cols]
 
-    return (
-        sdf.groupBy(*keys)
-        .applyInPandasWithState(fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout)
-    )
+    return sharded_keyed_process(sdf, keys, fn, _schema_of(sdf, out_cols))
 
 
 def streaming_topn(
@@ -179,95 +149,41 @@ def streaming_topn(
     """Per-key top-N by ``order_col`` DESC (ties: smaller ``tiebreak``
     first), re-emitting the full current ranking whenever it changes —
     the UpdatableTopNFunction strategy.  Output: keys + rank + payload.
+
+    State is the current top-n itself: a pandas frame of the sort and
+    payload columns with the dtypes the batches carried.
     """
     keys = list(keys)
     payload = list(payload)
-    d = dict(sdf.dtypes)
-    out_schema = (
-        _schema_of(sdf, keys)
-        + ", `rank` int, "
-        + ", ".join(f"`{c}` {d[c]}" for c in payload)
-    )
-    # typed-struct state (not a JSON blob): the current top-n as parallel
-    # per-column arrays — sort keys first (timestamps as int64 ns, which
-    # order identically), then one array per payload column in its
-    # native-ish type; Arrow moves the buffers without a per-batch
-    # encode/parse of the whole ranking
-    sort_cols = [("o", order_col), ("t", tiebreak)]
-    pay_cols = [(f"p{i}", c) for i, c in enumerate(payload)]
-    state_schema = ", ".join(
-        f"{s} array<{_state_arr_type(d[c])}>" for s, c in sort_cols + pay_cols
-    )
+    out_schema = _schema_of(sdf, keys) + ", `rank` int, " + _schema_of(sdf, payload)
+    cols = list(dict.fromkeys([order_col, tiebreak, *payload]))
 
-    arr_types = {s: _state_arr_type(d[c]) for s, c in sort_cols + pay_cols}
+    def top(df):
+        # sort DESC on order, ASC on tiebreak: two stable passes
+        return (
+            df.sort_values(tiebreak, kind="mergesort")
+            .sort_values(order_col, ascending=False, kind="mergesort")
+            .head(n)
+        )
 
     def fn(key, pdfs, state) -> Iterator:
         import pandas as pd
 
-        cols = [s for s, _ in sort_cols + pay_cols]
-        # rebuild bigint state columns as nullable Int64, NEVER a plain
-        # Python list: a list holding a None infers float64, which
-        # corrupts epoch-ns values past float precision (~2^53)
-        prev = (
-            pd.DataFrame({
-                s: (pd.array(list(a or []), dtype="Int64")
-                    if arr_types[s] == "bigint"
-                    else list(a or []))
-                for s, a in zip(cols, state.get)
-            })
-            if state.exists
-            else None
-        )
         frames = [p for p in pdfs if not p.empty]
         if not frames:
             return
         # vectorized batch pre-cut: only the batch's own top-n can enter
-        # the merged top-n, so sort the whole batch C-side and keep n rows
-        batch = pd.concat(frames)
-        batch = batch.sort_values(
-            [tiebreak], kind="mergesort"
-        ).sort_values([order_col], ascending=False, kind="mergesort").head(n)
-        new = pd.DataFrame(
-            {s: _state_encode(batch[c], d[c]).to_numpy() for s, c in sort_cols + pay_cols}
-        )
-        # never concat with an EMPTY frame: pandas widens int64 to float64
-        # there, which corrupts epoch-ns sort keys past float precision
-        buf = new if prev is None or prev.empty else pd.concat(
-            [prev, new], ignore_index=True
-        )
-        # sort DESC on order, ASC on tiebreak: two stable passes
-        buf = (
-            buf.sort_values("t", kind="mergesort")
-            .sort_values("o", ascending=False, kind="mergesort")
-            .head(n)
-            .reset_index(drop=True)
-        )
-        # sanitize pd.NA/NaN to None so the Arrow state serializer sees
-        # plain Python values (bigint entries as int, nulls as null)
-        state.update(tuple(
-            [None if pd.isna(v) else (int(v) if arr_types[s] == "bigint" else v)
-             for v in buf[s].tolist()]
-            for s in cols
-        ))
-        out = pd.DataFrame({k_: [v] * len(buf) for k_, v in zip(keys, key)})
-        out["rank"] = range(1, len(buf) + 1)
-        for (s, c) in pay_cols:
-            col = buf[s]
-            if d[c] in _TS_TYPES:
-                # to_datetime (default ns unit) on the exact Int64/object
-                # ints: None state entries decode to NaT, not a raise
-                out[c] = pd.to_datetime(col, utc=True)
-            elif col.isna().any():
-                # NaN/NA → None so Arrow emits SQL NULL, not float NaN
-                out[c] = col.astype(object).where(col.notna(), None)
-            else:
-                out[c] = col
-        yield out[keys + ["rank"] + payload]
+        # the merged top-n
+        buf = top(pd.concat(frames)[cols])
+        if state.exists:
+            buf = top(pd.concat([state.get, buf], ignore_index=True))
+        buf = buf.reset_index(drop=True)
+        state.update(buf)
+        yield buf.assign(rank=range(1, len(buf) + 1), **dict(zip(keys, key)))[
+            keys + ["rank"] + payload
+        ]
 
-    return (
-        sdf.groupBy(*keys)
-        .applyInPandasWithState(fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout)
-    )
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def streaming_over_time_range(
@@ -286,35 +202,31 @@ def streaming_over_time_range(
     later than the buffer horizon see only retained history (watermark
     bounds this, as in the reference).
     """
-    keys = list(keys)
     out_cols = list(sdf.columns)
     out_schema = _schema_of(sdf, out_cols) + ", `over_cnt` bigint, `over_sum` double"
-    # event time kept as EXACT int64 epoch-ns (float seconds resolve only
-    # ~0.4 µs at epoch magnitude, so µs-spaced rows could land on the
-    # wrong side of a range boundary — same fix as the count windows)
-    state_schema = "hts array<bigint>, hval array<double>"
     # round, don't truncate: a fractional range_seconds (0.5) would
     # otherwise silently become a zero-width window
     range_ns = int(round(float(range_seconds) * 1e9))
 
     def fn(key, pdfs, state) -> Iterator:
+        import bisect
+
         import pandas as pd
 
-        # typed-struct state (parallel arrays, Arrow-moved) — no JSON
-        # encode/parse of the whole buffer per batch
-        hist = (
-            list(zip(state.get[0], state.get[1])) if state.exists else []
-        )
+        # state: the (epoch-ns, value) rows inside the range horizon.
+        # Event time stays EXACT int64 epoch-ns (float seconds resolve
+        # only ~0.4 µs at epoch magnitude, so µs-spaced rows could land
+        # on the wrong side of a range boundary)
+        hist = state.get if state.exists else []
         batches = [p for p in pdfs if not p.empty]
         if not batches:
             return
         pdf = pd.concat(batches).sort_values(ts, kind="mergesort").reset_index(drop=True)
         ev_ts = pdf[ts].astype("int64").tolist()
         ev_val = pdf[value_col].astype(float)
-        merged = sorted([tuple(e) for e in hist] + list(zip(ev_ts, ev_val)))
+        merged = sorted(hist + list(zip(ev_ts, ev_val)))
         m_ts = [e[0] for e in merged]
         m_val = [e[1] for e in merged]
-        import bisect
 
         cnts, sums = [], []
         # prefix sums over the merged, time-sorted buffer: each output row
@@ -332,16 +244,10 @@ def streaming_over_time_range(
         out["over_cnt"] = pd.Series(cnts, dtype="int64")
         out["over_sum"] = pd.Series(sums, dtype="float64")
         horizon = max(m_ts) - range_ns
-        keep = [e for e in merged if e[0] >= horizon]
-        state.update(
-            ([int(e[0]) for e in keep], [float(e[1]) for e in keep])
-        )
+        state.update([e for e in merged if e[0] >= horizon])
         yield out
 
-    return (
-        sdf.groupBy(*keys)
-        .applyInPandasWithState(fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout)
-    )
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def streaming_over_rows(
@@ -355,21 +261,17 @@ def streaming_over_rows(
     """Streaming OVER, ROWS frame: per row, count/sum over the key's
     previous ``n_preceding`` rows plus the current one, in event-time
     order (RowTimeRowsBoundedPrecedingFunction.java — the ROWS sibling of
-    the RANGE operator above).  State = the last ``n_preceding`` values.
+    the RANGE operator above).  State = the rows-seen counter and the
+    last ``n_preceding`` values: a ROWS frame never consults event time
+    or tiebreak again once ordering within the batch is done.
 
     Output: input columns + ``over_cnt`` + ``over_sum``.
     """
-    keys = list(keys)
     out_cols = list(sdf.columns)
     out_schema = _schema_of(sdf, out_cols) + ", `over_cnt` bigint, `over_sum` double"
-    # typed-struct state: ONLY the last n_preceding values and the rows-
-    # seen counter — a ROWS frame never consults event time or tiebreak
-    # again once ordering within the batch is done (the earlier es/tie
-    # arrays were written and read back but never used; cnt was derived
-    # from a full-history length it no longer stores)
-    state_schema = "cnt bigint, tval array<double>"
 
     def fn(key, pdfs, state) -> Iterator:
+        import numpy as np
         import pandas as pd
 
         batches = [p for p in pdfs if not p.empty]
@@ -380,19 +282,13 @@ def streaming_over_rows(
             .sort_values([ts, tiebreak], kind="mergesort")
             .reset_index(drop=True)
         )
-        if state.exists:
-            seen, tval = state.get
-            tail = list(tval or [])
-        else:
-            seen, tail = 0, []
+        seen, tail = state.get if state.exists else (0, np.empty(0))
         # vectorized frame evaluation: prepend the state tail and run a
         # C-side rolling sum over the concatenated value series — no
         # per-row Python loop
-        import numpy as np
-
         new_vals = pdf[value_col].astype(float).to_numpy()
         m = n_preceding + 1
-        vals = np.concatenate([np.asarray(tail, dtype=float), new_vals])
+        vals = np.concatenate([tail, new_vals])
         # exact per-window sums (no running-subtract drift): a strided
         # view over the zero-padded series, one .sum per frame
         padded = np.concatenate([np.zeros(m - 1), vals])
@@ -405,16 +301,10 @@ def streaming_over_rows(
         out = pdf[out_cols].copy()
         out["over_cnt"] = cnts_all[k:].astype("int64")
         out["over_sum"] = sums_all[k:]
-        state.update((
-            int(seen + len(new_vals)),
-            [float(v) for v in vals[-m:]],
-        ))
+        state.update((seen + len(new_vals), vals[-m:]))
         yield out
 
-    return (
-        sdf.groupBy(*keys)
-        .applyInPandasWithState(fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout)
-    )
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def streaming_over_unbounded(
@@ -434,10 +324,8 @@ def streaming_over_unbounded(
 
     Output: input columns + ``over_cnt`` + ``over_sum``.
     """
-    keys = list(keys)
     out_cols = list(sdf.columns)
     out_schema = _schema_of(sdf, out_cols) + ", `over_cnt` bigint, `over_sum` double"
-    state_schema = "cnt bigint, acc double"
 
     def fn(key, pdfs, state) -> Iterator:
         import numpy as np
@@ -457,13 +345,10 @@ def streaming_over_unbounded(
         out = pdf[out_cols].copy()
         out["over_cnt"] = np.arange(cnt + 1, cnt + len(vals) + 1, dtype="int64")
         out["over_sum"] = run
-        state.update((int(cnt + len(vals)), float(run[-1])))
+        state.update((cnt + len(vals), run[-1]))
         yield out
 
-    return (
-        sdf.groupBy(*keys)
-        .applyInPandasWithState(fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout)
-    )
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def count_tumble_window(
@@ -479,37 +364,24 @@ def count_tumble_window(
     keys = list(keys)
     out_schema = _schema_of(sdf, keys) + ", `win_seq` bigint, `n` bigint, `sum_value` double"
     d = dict(sdf.dtypes)
-    # typed-struct state: window counter + the trailing partial window's
-    # (es, tie, val) rows.  Event time is EXACT int64 epoch-ns (the old
-    # float-seconds encoding collapsed sub-µs timestamps) and the tiebreak
-    # keeps its native state type via _state_arr_type (the old float cast
-    # raised on string tiebreaks and lost precision past 2^53 on int64
-    # ids) — ADVICE r5 (b).
-    tie_t = _state_arr_type(d[tiebreak])
-    state_schema = (
-        f"seq long, pes array<bigint>, ptie array<{tie_t}>, pval array<double>"
-    )
 
     def fn(key, pdfs, state) -> Iterator:
         import pandas as pd
 
-        if state.exists:
-            seq = state.get[0]
-            pending = [list(t) for t in zip(*(a or [] for a in state.get[1:]))]
-        else:
-            seq, pending = 0, []
+        # state: window counter + the trailing partial window's (es, tie,
+        # val) rows.  Event time is EXACT int64 epoch-ns and the tiebreak
+        # keeps its native value (a float cast raised on string tiebreaks
+        # and lost precision past 2^53 on int64 ids — ADVICE r5 (b)).
+        seq, pending = state.get if state.exists else (0, [])
         batches = [p for p in pdfs if not p.empty]
         if not batches:
             return
         pdf = pd.concat(batches).sort_values([ts, tiebreak], kind="mergesort")
-        rows = pending + [
-            list(r)
-            for r in zip(
-                pdf[ts].astype("int64").tolist(),
-                _state_encode(pdf[tiebreak], d[tiebreak]).tolist(),
-                pdf[value_col].astype(float).tolist(),
-            )
-        ]
+        rows = [*pending, *zip(
+            pdf[ts].astype("int64").tolist(),
+            _state_encode(pdf[tiebreak], d[tiebreak]).tolist(),
+            pdf[value_col].astype(float).tolist(),
+        )]
         rows.sort(key=_null_last_key)
         out = []
         while len(rows) >= size:
@@ -519,19 +391,11 @@ def count_tumble_window(
                  "sum_value": sum(r[2] for r in win)}
             )
             seq += 1
-        state.update((
-            seq,
-            [r[0] for r in rows],
-            [r[1] for r in rows],
-            [float(r[2]) for r in rows],
-        ))
+        state.update((seq, rows))
         if out:
             yield pd.DataFrame(out)
 
-    return (
-        sdf.groupBy(*keys)
-        .applyInPandasWithState(fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout)
-    )
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def keyed_process(
@@ -575,56 +439,63 @@ class _KeyState:
         self.updated = v
 
 
+def _with_shard_key(sdf: DataFrame, keys: Sequence[str], shards: int,
+                    key_col: str) -> DataFrame:
+    """``sdf`` plus ``key_col``, a collision-free string encoding of the
+    ``keys`` tuple, and ``_shard``, its hash bucket in ``[0, shards)``.
+
+    The encoding is the JSON array of the key columns cast to string.
+    ``concat_ws`` merged keys: it skips NULLs, so ``(NULL, 'x')`` and
+    ``('x', NULL)`` met, and a value holding the separator could shift
+    into the next position.  The cast keeps µs timestamps (``to_json``
+    of a struct prints them only to the millisecond)."""
+    enc = ("to_json(array("
+           + ", ".join(f"CAST(`{c}` AS STRING)" for c in keys) + "))")
+    return sdf.selectExpr(
+        "*", f"{enc} AS `{key_col}`", f"pmod(hash({enc}), {int(shards)}) AS _shard")
+
+
 def sharded_keyed_process(
     sdf: DataFrame,
     keys: Sequence[str],
     fn,
     out_schema: str,
-    output_mode: str = "update",
-    shards: int | None = None,
 ) -> DataFrame:
     """Run a per-key ``fn(key, pdf_iter, state)`` with its state SHARDED
-    by ``hash(key) % shards`` — optimization r18 (guide §4.2, VERDICT r17
-    "Next round" #5): ``applyInPandasWithState`` pays ~1 ms of framework
-    cost (group slicing, Python invocation, Arrow state round-trip) per
-    KEY per micro-batch, which dominates the event-window tier at 1500
-    keys (the r17 trivial-fn floor receipt: 1.43-1.57 s of pure per-key
-    framework under a no-op fn).  Grouping by shard caps the framework
+    by ``hash(key) % shards`` — the one keyed-state path of every built-in
+    keyed operator.  ``applyInPandasWithState`` pays ~1 ms of framework
+    cost (group slicing, Python invocation, state round-trip) per KEY per
+    micro-batch, which dominates at thousands of keys (the r17
+    trivial-fn floor receipt: 1.43-1.57 s of pure per-key framework under
+    a no-op fn at 1500 keys).  Grouping by shard caps the framework
     invocations at ``shards`` per batch; within a shard the per-key split
     is one vectorized pandas groupby and each key's state rides the
     shard row as one pickled binary cell.
 
-    Semantics are IDENTICAL to ``groupBy(*keys).applyInPandasWithState``
-    for fns with this module's contract (tuple state via
-    exists/get/update, update-mode, NoTimeout, per-key logic independent
-    across keys): sharding only partitions keys, a key absent from a
-    batch keeps its state untouched either way, and ``fn`` receives the
-    same (key values, per-key rows, state) it received per-key —
-    A/B-verified output-equal on the graded event-window rows and pinned
-    by tests/test_r18_optimizations.py.
+    Semantics equal ``groupBy(*keys).applyInPandasWithState`` in update
+    mode without timeouts, for per-key logic independent across keys:
+    sharding only partitions keys, a key absent from a batch keeps its
+    state untouched either way, and ``fn`` receives the same (key values,
+    per-key rows, state) it would receive per key.  The state is any
+    picklable value, numpy and pandas objects included; ``update`` with
+    None leaves it unchanged.
 
-    ``shards`` defaults to ``8 x defaultParallelism`` (floor 64): unlike
+    ``shards`` is ``8 x defaultParallelism`` (floor 64): unlike
     streaming_first_seen_flag's 1024 floor (whose per-shard work is a
     pure vectorized merge), the per-key Python loop here wants several
     keys per shard invocation to amortize the framework cost, and the
     key population (distinct users) is orders of magnitude below
-    first-seen's bucket population.  Not a local[32] tune: parallelism
-    scales the shard count up with the cluster.
+    first-seen's bucket population.  Parallelism scales the shard count
+    up with the cluster.
 
     At 100 TB: the shuffle distributes by shard exactly as it did by
-    key; per-shard state is ``keys/shards`` pickled tuples — bounded by
+    key; per-shard state is ``keys/shards`` pickled values — bounded by
     the same per-key state bounds, times the keys-per-shard fan-in."""
     import pickle
 
     keys = list(keys)
-    if shards is None:
-        shards = max(
-            64, sdf.sparkSession.sparkContext.defaultParallelism * 8)
-    skey = ("concat_ws(char(31), "
-            + ", ".join(f"CAST(`{c}` AS STRING)" for c in keys) + ")")
-    sharded = sdf.selectExpr(
-        "*", f"{skey} AS _skey",
-        f"pmod(hash({skey}), {int(shards)}) AS _shard")
+    shards = max(64, sdf.sparkSession.sparkContext.defaultParallelism * 8)
+    sharded = _with_shard_key(sdf, keys, shards, "_skey")
 
     def shard_fn(_shard_key, pdfs, state):  # noqa: ANN001
         import pandas as pd
@@ -658,7 +529,7 @@ def sharded_keyed_process(
     shard_fn._per_key_fn = fn
     return sharded.groupBy("_shard").applyInPandasWithState(
         shard_fn, out_schema, "ks array<string>, st array<binary>",
-        output_mode, GroupStateTimeout.NoTimeout)
+        "update", GroupStateTimeout.NoTimeout)
 
 
 def tumble_event_windows(
@@ -730,16 +601,12 @@ def tumble_event_windows(
         + ", `is_final` boolean"
     )
     # per-key state tuple (wm, ws[], fired[], done[], refire[], es[][],
-    # tie[][], val[][]): one entry per live window as parallel arrays.
+    # tie[][], val[][]): one entry per live window as parallel lists.
     # The tiebreak keeps its NATIVE type (a float cast raised on strings
     # and lost int64 exactness past 2^53 — the count-window defect
-    # class; _state_arr_type still validates it); event time stays float
-    # seconds, exact at the reference's ms assignment grain.  Since r18
-    # the tuple rides a sharded_keyed_process binary cell instead of a
-    # per-key Arrow state row — the per-KEY framework invocation was the
-    # tier's dominant cost (module fn docstring).
+    # class); event time stays float seconds, exact at the reference's
+    # ms assignment grain.
     d_types = dict(sdf.dtypes)
-    _state_arr_type(d_types[tiebreak])
 
     def fire_points(w_start: int, wm: float, fired_k: int):
         w_end = w_start + size_s
@@ -875,7 +742,7 @@ def tumble_event_windows(
         if out:
             yield pd.DataFrame(out)
 
-    return sharded_keyed_process(sdf, keys, fn, out_schema, "update")
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def session_event_windows(
@@ -922,11 +789,9 @@ def session_event_windows(
         _schema_of(sdf, keys)
         + ", `w_start` bigint, `w_end` bigint, `n` bigint, `sum_value` double"
     )
-    # native-typed tiebreak, same rationale as tumble_event_windows; the
-    # (wm, es[], tie[], val[]) tuple rides a sharded_keyed_process binary
-    # cell since r18 (per-KEY framework cost dominated this tier)
+    # per-key state (wm, es[], tie[], val[]); native-typed tiebreak, same
+    # rationale as tumble_event_windows
     d_types = dict(sdf.dtypes)
-    _state_arr_type(d_types[tiebreak])
 
     def fn(key, pdfs, state) -> Iterator:
         import pandas as pd
@@ -992,7 +857,7 @@ def session_event_windows(
         if out:
             yield pd.DataFrame(out)
 
-    return sharded_keyed_process(sdf, keys, fn, out_schema, "update")
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def temporal_sort_stream(
@@ -1026,8 +891,7 @@ def temporal_sort_stream(
         _schema_of(sdf, keys)
         + f", `emit_seq` bigint, `ets` double, `tie` {tie_t}, `value` double"
     )
-    # the (wm, seq, es[], tie[], val[]) tuple rides a sharded_keyed_process
-    # binary cell since r18 (per-KEY framework cost dominated this tier)
+    # per-key state (wm, seq, es[], tie[], val[])
 
     def fn(key, pdfs, state) -> Iterator:
         import pandas as pd
@@ -1080,7 +944,7 @@ def temporal_sort_stream(
         if out:
             yield pd.DataFrame(out)
 
-    return sharded_keyed_process(sdf, keys, fn, out_schema, "update")
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def global_window_delta_trigger(
@@ -1110,7 +974,6 @@ def global_window_delta_trigger(
         _schema_of(sdf, keys)
         + ", `fire_seq` bigint, `n` bigint, `sum_value` double, `trigger_value` double"
     )
-    state_schema = "baseline double, pend_n bigint, pend_sum double, seq bigint"
 
     def fn(key, pdfs, state) -> Iterator:
         import pandas as pd
@@ -1151,9 +1014,7 @@ def global_window_delta_trigger(
         if out:
             yield pd.DataFrame(out)
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def count_slide_window(
@@ -1168,7 +1029,8 @@ def count_slide_window(
     """Sliding COUNT windows (CountSlidingWindowAssigner + count trigger):
     per key, fire every ``slide`` rows an aggregate over the last ``size``
     rows, in event-time order; only full windows fire.  State = row
-    counter + the last ``size - 1`` values.
+    counter + the last ``size - 1`` values (a fire sums values only, and
+    rows from later batches append after them).
 
     Output: keys + fire_rn (the 1-based row count at the fire) + n +
     sum_value.
@@ -1177,23 +1039,11 @@ def count_slide_window(
     out_schema = (
         _schema_of(sdf, keys) + ", `fire_rn` bigint, `n` bigint, `sum_value` double"
     )
-    d = dict(sdf.dtypes)
-    # typed-struct state: row counter + the last size-1 (es, tie, val)
-    # rows.  Exact int64 epoch-ns event time + native-typed tiebreak, same
-    # rationale as count_tumble_window (ADVICE r5 (b)).
-    tie_t = _state_arr_type(d[tiebreak])
-    state_schema = (
-        f"cnt long, tes array<bigint>, ttie array<{tie_t}>, tval array<double>"
-    )
 
     def fn(key, pdfs, state) -> Iterator:
         import pandas as pd
 
-        if state.exists:
-            cnt = state.get[0]
-            tail = [list(t) for t in zip(*(a or [] for a in state.get[1:]))]
-        else:
-            cnt, tail = 0, []
+        cnt, tail = state.get if state.exists else (0, [])
         batches = [p for p in pdfs if not p.empty]
         if not batches:
             return
@@ -1202,17 +1052,9 @@ def count_slide_window(
             .sort_values([ts, tiebreak], kind="mergesort")
             .reset_index(drop=True)
         )
-        vals = list(
-            zip(
-                pdf[ts].astype("int64").tolist(),
-                _state_encode(pdf[tiebreak], d[tiebreak]).tolist(),
-                pdf[value_col].astype(float).tolist(),
-            )
-        )
         out = []
-        for v in vals:
-            tail.append(list(v))
-            tail = tail[-size:]
+        for v in pdf[value_col].astype(float).tolist():
+            tail = [*tail, v][-size:]
             cnt += 1
             if cnt % slide == 0 and cnt >= size:
                 out.append(
@@ -1220,22 +1062,14 @@ def count_slide_window(
                         **dict(zip(keys, key)),
                         "fire_rn": cnt,
                         "n": size,
-                        "sum_value": sum(e[2] for e in tail),
+                        "sum_value": sum(tail),
                     }
                 )
-        keep = tail[-(size - 1):] if size > 1 else []
-        state.update((
-            cnt,
-            [r[0] for r in keep],
-            [r[1] for r in keep],
-            [float(r[2]) for r in keep],
-        ))
+        state.update((cnt, tail[-(size - 1):] if size > 1 else []))
         if out:
             yield pd.DataFrame(out)
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
+    return sharded_keyed_process(sdf, keys, fn, out_schema)
 
 
 def streaming_first_seen_flag(
@@ -1275,7 +1109,7 @@ def streaming_first_seen_flag(
     local[32] to 256 shards on a noop-isolated 2.86 -> 2.36 s receipt,
     but the driver's window regressed the full stream_lsh_dedup row
     0.83x and this round's driver-conditions interleaved A/B (fresh
-    session per arm, min-of-3, 3 rounds — scripts/ab_lsh_shards.py)
+    session per arm, min-of-3, 3 rounds; receipt in OPTIMIZATION_r18.md)
     read 1024 ahead in 2 of 3 paired sessions (medians 3.60 vs 3.91 s);
     the isolated-op saving does not survive the full row, so the floor
     is restored to the r16-measured constant.  The emitted flags are
@@ -1291,8 +1125,6 @@ def streaming_first_seen_flag(
     """
     import time as _time
 
-    from pyspark.sql import functions as F
-
     bucket_keys = list(bucket_keys)
     if shards is None:
         shards = max(
@@ -1303,9 +1135,7 @@ def streaming_first_seen_flag(
         + f", `{id_col}` {d[id_col]}, `dup` boolean"
     )
     state_schema = "bk array<string>, mn array<bigint>, ls array<double>"
-    sdf = sdf.withColumn(
-        "_bucket", F.concat_ws("\x1f", *[F.col(c).cast("string") for c in bucket_keys])
-    ).withColumn("_shard", F.pmod(F.hash(F.col("_bucket")), F.lit(shards)))
+    sdf = _with_shard_key(sdf, bucket_keys, shards, "_bucket")
 
     def fn(key, pdfs, state) -> Iterator:
         import numpy as np

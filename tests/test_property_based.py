@@ -507,6 +507,41 @@ class _FakeGroupState:
         self._v = v
 
 
+def _per_key_core(op, dtypes, *args, **kwargs):
+    """The per-key fn a keyed operator hands to ``sharded_keyed_process``
+    (its ``_per_key_fn`` hook), built over a schema-only stand-in for
+    the streaming DataFrame: the properties drive the operator core
+    without a Spark streaming query per example."""
+    from types import SimpleNamespace
+
+    captured = {}
+
+    class _Grouped:
+        def applyInPandasWithState(self, f, *rest):
+            captured["fn"] = f._per_key_fn
+
+    class _Frame:
+        sparkSession = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=8))
+
+        def __init__(self):
+            self.dtypes = list(dtypes)
+            self.columns = [c for c, _ in dtypes]
+
+        def selectExpr(self, *a):
+            return self
+
+        def groupBy(self, *a):
+            return _Grouped()
+
+    op(_Frame(), *args, **kwargs)
+    return captured["fn"]
+
+
+_EVENT_DTYPES = [("k", "bigint"), ("ts", "timestamp"), ("tie", "double"),
+                 ("val", "double")]
+
+
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(st.integers(min_value=0, max_value=400), min_size=1, max_size=40),
@@ -530,37 +565,8 @@ def test_session_windows_batching_invariance(times, cuts, gap_s):
             chunks.append(times[prev:c])
         prev = c
 
-    # drive the operator fn directly (no Spark streaming query per example)
-    fn = session_event_windows.__wrapped__ if hasattr(
-        session_event_windows, "__wrapped__") else None
-    # build the inner fn by calling the operator with a stub: the operator
-    # only touches sdf for schema + groupBy at the END, so grab fn via a
-    # tiny shim object
-    captured = {}
-
-    class _Stub:
-        def __init__(self):
-            self.dtypes = [("k", "bigint"), ("ts", "timestamp"),
-                           ("tie", "double"), ("val", "double")]
-
-        class sparkSession:  # sharded_keyed_process's shards default
-            class sparkContext:
-                defaultParallelism = 8
-
-        def selectExpr(self, *a):
-            return self
-
-        def groupBy(self, *a):
-            class _G:
-                def applyInPandasWithState(self, f, *rest):
-                    # r18: the sharded wrapper exposes the per-key core
-                    captured["fn"] = getattr(f, "_per_key_fn", f)
-                    return None
-
-            return _G()
-
-    session_event_windows(_Stub(), ["k"], "ts", "tie", "val", gap_s)
-    inner = captured["fn"]
+    inner = _per_key_core(session_event_windows, _EVENT_DTYPES,
+                          ["k"], "ts", "tie", "val", gap_s)
 
     state = _FakeGroupState()
     fired = []
@@ -618,31 +624,8 @@ def test_temporal_sort_batching_invariance(times, cuts, delay_s):
             chunks.append(times[prev:c])
         prev = c
 
-    captured = {}
-
-    class _Stub:
-        def __init__(self):
-            self.dtypes = [("k", "bigint"), ("ts", "timestamp"),
-                           ("tie", "double"), ("val", "double")]
-
-        class sparkSession:  # sharded_keyed_process's shards default
-            class sparkContext:
-                defaultParallelism = 8
-
-        def selectExpr(self, *a):
-            return self
-
-        def groupBy(self, *a):
-            class _G:
-                def applyInPandasWithState(self, f, *rest):
-                    # r18: the sharded wrapper exposes the per-key core
-                    captured["fn"] = getattr(f, "_per_key_fn", f)
-                    return None
-
-            return _G()
-
-    temporal_sort_stream(_Stub(), ["k"], "ts", "tie", "val", delay_s=delay_s)
-    inner = captured["fn"]
+    inner = _per_key_core(temporal_sort_stream, _EVENT_DTYPES,
+                          ["k"], "ts", "tie", "val", delay_s=delay_s)
     state = _FakeGroupState()
     base = pd.Timestamp("2024-01-01")
     emitted = []
@@ -854,24 +837,10 @@ def test_count_tumble_batching_invariance_null_string_ties(rows, cuts, size):
             chunks.append(rows[prev:c])
         prev = c
 
-    captured = {}
-
-    class _Stub:
-        def __init__(self):
-            self.dtypes = [("k", "bigint"), ("ts", "timestamp"),
-                           ("tie", "string"), ("val", "double")]
-
-        def groupBy(self, *a):
-            class _G:
-                def applyInPandasWithState(self, f, *rest):
-                    captured["fn"] = f
-                    return None
-
-            return _G()
-
-    count_tumble_window(_Stub(), ["k"], ts="ts", tiebreak="tie",
-                        size=size, value_col="val")
-    inner = captured["fn"]
+    inner = _per_key_core(
+        count_tumble_window,
+        [("k", "bigint"), ("ts", "timestamp"), ("tie", "string"), ("val", "double")],
+        ["k"], ts="ts", tiebreak="tie", size=size, value_col="val")
 
     state = _FakeGroupState()
     fired = []

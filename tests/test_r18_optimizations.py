@@ -2,7 +2,7 @@
 
 Each test pins an r18 change whose behavior must be indistinguishable
 from the r17 form: gate-history compaction (observable equivalence +
-the state-size bound it buys), the first-seen shard floor, and the
+the state-size bound it buys), the shard-count defaults, and the
 run_to_stage exit sweep registration.
 """
 
@@ -115,15 +115,46 @@ def test_gate_history_compaction_keeps_frontier_collision_raw():
     assert compacted2 == [("+", 1, 0), ("-", 1, 5), ("+", 1, 9)]
 
 
-# ---- first-seen shard floor --------------------------------------------------
+# ---- shard-count defaults ---------------------------------------------------
 
-def test_first_seen_default_shards_floor_1024(spark):
-    """r18: the shard default is max(1024, 8 x defaultParallelism) —
-    the r17 floor of 64 put local[32] at 256 shards, which the driver's
-    window and this round's fresh-session A/B both read as a loss on
-    the full stream_lsh_dedup row (receipt in OPTIMIZATION_r18.md)."""
+def _shard_literal(df) -> int:
+    """The N of the ``pmod(hash(key), N) AS _shard`` column in ``df``'s
+    analyzed plan."""
+    import re
+
+    plan = df._jdf.queryExecution().analyzed().toString()
+    found = set(re.findall(r", (\d+)\) AS _shard#", plan))
+    assert len(found) == 1, plan
+    return int(found.pop())
+
+
+def _events(spark, src):
+    return spark.readStream.schema(
+        "k bigint, ts timestamp, tie bigint, val double").parquet(str(src))
+
+
+def test_first_seen_default_shards_floor_1024(spark, tmp_path):
+    """r18: the first-seen shard default is max(1024, 8 x
+    defaultParallelism) — the r17 floor of 64 put local[32] at 256
+    shards, which the driver's window and this round's fresh-session A/B
+    both read as a loss on the full stream_lsh_dedup row (receipt in
+    OPTIMIZATION_r18.md).  Read from the plan the operator builds."""
+    from flink_1_12_0_spark.streaming.stateful import streaming_first_seen_flag
+
     par = spark.sparkContext.defaultParallelism
-    assert max(1024, par * 8) >= 1024
+    out = streaming_first_seen_flag(_events(spark, tmp_path), ["k"], "tie")
+    assert _shard_literal(out) == max(1024, 8 * par)
+
+
+def test_sharded_keyed_process_default_shards(spark, tmp_path):
+    """The keyed-operator driver shards by max(64, 8 x
+    defaultParallelism), read from the plan a driven operator builds."""
+    from flink_1_12_0_spark.streaming.stateful import session_event_windows
+
+    par = spark.sparkContext.defaultParallelism
+    out = session_event_windows(
+        _events(spark, tmp_path), ["k"], "ts", "tie", "val", 60)
+    assert _shard_literal(out) == max(64, 8 * par)
 
 
 # ---- run_to_stage exit sweep --------------------------------------------------

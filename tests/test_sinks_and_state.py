@@ -113,22 +113,37 @@ def test_state_ttl_timeout_fires(spark):
         "n bigint",
         timeout=GroupStateTimeout.ProcessingTimeTimeout,
     )
-    from flink_1_12_0_spark.streaming.core import run_to_memory
+    import time
 
-    # short bound: under availableNow the query keeps scheduling batches
-    # while processing-time timers re-arm; 20 s is ample for the single
-    # data batch + the expiry batches we assert on.
-    res = run_to_memory(out, output_mode="update", timeout_s=20)
-    live = res.where(~F.col("expired"))
-    assert live.count() > 0
-    # counts per key must equal the batch truth
-    got = {r["user_id"]: r["n"] for r in live.collect()}
     truth = {
         r["user_id"]: r["cnt"]
         for r in spark.sql(
             f"SELECT user_id, count(*) cnt FROM parquet.`{SF_DIR}/events.parquet` GROUP BY 1"
         ).collect()
     }
+    # a ProcessingTimeTimeout query never finishes under availableNow (the
+    # re-arming timers keep scheduling no-data batches), so the test bounds
+    # the run itself: stop once every key's state has expired (each key
+    # expires once — the timed-out branch removes it), or after 120 s.
+    with tempfile.TemporaryDirectory(prefix="sg_ckpt_",
+                                     ignore_cleanup_errors=True) as ckpt:
+        q = (
+            out.writeStream.format("memory").queryName("ttl_timeout_sink")
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        res = spark.table("ttl_timeout_sink")
+        expired = res.where(F.col("expired"))
+        deadline = time.time() + 120
+        while expired.count() < len(truth) and time.time() < deadline:
+            time.sleep(0.5)
+        q.stop()
+    assert expired.count() == len(truth)
+    live = res.where(~F.col("expired"))
+    assert live.count() > 0
+    # counts per key must equal the batch truth
+    got = {r["user_id"]: r["n"] for r in live.collect()}
     assert got == truth
 
 

@@ -1,26 +1,26 @@
 """State-size RECEIPTS for the streaming stateful tier.
 
 The 100 TB streaming claim for the custom-state operators has so far
-rested on design argument (sharded/keyed state, typed Arrow arrays) plus
-output correctness; these tests turn it into a measured receipt by
-reading the engine's own state-store metrics
-(StreamingQueryProgress.stateOperators.numRowsTotal) across micro-batches
-and asserting the bound each operator claims:
+rested on design argument (sharded/keyed state) plus output correctness;
+these tests turn it into a measured receipt by reading the engine's own
+state-store metrics (StreamingQueryProgress.stateOperators.numRowsTotal)
+across micro-batches and asserting the bound each operator claims:
 
 - streaming_first_seen_flag: state rows <= ``shards`` (NOT input rows,
   NOT bucket count) — the per-task state is a shard-keyed Arrow map,
-- dedup_keep_last: state rows <= distinct keys,
-- count_tumble_window: state rows <= distinct keys (the trailing partial
-  window lives inside the key's single state row),
-- streaming_topn: state rows <= distinct keys (the whole top-N ranking
-  is typed arrays INSIDE the key's one state row — never N rows),
-- temporal_sort_stream: state rows <= distinct keys (the delay-horizon
-  buffer is arrays inside the key row; emitted rows leave it),
-- session_event_windows: state rows <= distinct keys (every pending
-  session's elements pool inside the key row; fired sessions leave it),
-- match_recognize_stream: state rows <= distinct keys (the per-key NFA
-  buffer is typed arrays inside the key row; matched prefixes are
-  consumed and WITHIN prunes the rest).
+- every keyed operator below runs on ``sharded_keyed_process``: one
+  state row per OCCUPIED shard, each holding its keys' states as pickled
+  cells, so state rows <= distinct keys for
+  - dedup_keep_last (the winner's order/tiebreak per key),
+  - count_tumble_window (the trailing partial window per key),
+  - streaming_topn (the whole top-N ranking is one per-key cell — never
+    N rows),
+  - temporal_sort_stream (the delay-horizon buffer; emitted rows leave
+    it),
+  - session_event_windows (every pending session's elements pool in the
+    key's cell; fired sessions leave it),
+  - match_recognize_stream (the per-key NFA buffer; matched prefixes are
+    consumed and WITHIN prunes the rest).
 
 Each run feeds 3 file-chunks with maxFilesPerTrigger=1 so state is
 observed across >= 3 real micro-batches; the input row count is asserted
