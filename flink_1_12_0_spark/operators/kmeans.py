@@ -25,7 +25,7 @@ means + localCheckpoint per iteration) paid 4 exchanges and 2 extra jobs
 per iteration for the same bounded artifact; measured r18 on the full
 graded row (fit + cell top-k, interleaved min-of-3 A/B at sf0.1):
 2.49 s -> 1.81 s (1.38x), outputs bit-identical
-(scripts/ab_kmeans_literal.py).
+(receipts in OPTIMIZATION_r18.md).
 """
 
 from __future__ import annotations

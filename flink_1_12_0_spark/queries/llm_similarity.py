@@ -1111,7 +1111,7 @@ def _ivfadc_recall_sql(is_spark: bool) -> str:
     # Optimization r18 (guide §2.3/§2.4), Spark side only — the DuckDB
     # oracle text is byte-identical to its r17 form, and the Spark
     # rewrite is value-exact (A/B-proven equal at sf0.01 and sf0.1,
-    # scripts/ab_ann_equality.py):
+    # receipts in OPTIMIZATION_r18.md):
     # - the code ASSIGNMENT's rank-1 window (512k (vector, sub, code)
     #   rows shuffled + sorted per (vec_id, sub) partition) becomes a
     #   max_by GROUP BY — map-side partial aggregation collapses the
@@ -2416,7 +2416,7 @@ def _hybrid3_tail(tf: str, explode_q: str, is_spark: bool,
                   weights: tuple[int, int, int] = (1, 1, 1)) -> str:
     # Optimization r18 (guide §2.4 — remove the shuffle outright), Spark
     # side only; the DuckDB text is unchanged and the rewrite is
-    # value-exact (A/B-proven at sf0.01/sf0.1, scripts/ab_hybrid3.py):
+    # value-exact (A/B-proven at sf0.01/sf0.1, OPTIMIZATION_r18.md):
     # the BM25 arm needs tf rows for only the STANDING terms, so the
     # full-corpus (doc, word) GROUP BY + localCheckpoint the callers
     # built is replaced by a row-local matched-term sliver

@@ -472,6 +472,15 @@ def sharded_keyed_process(
     is one vectorized pandas groupby and each key's state rides the
     shard row as one pickled binary cell.
 
+    Beside that per-key cost, every state task pays a per-task floor:
+    ~0.28 s median at 32 state partitions on 4 cores with 2000-row
+    micro-batches — ~57 ms from launch to the first shard call, ~86 ms
+    in the shard calls, ~136 ms after them, of which the state-store
+    commit is ~85 ms.  32 tasks on 4 cores make 8 waves, so this floor,
+    not the per-key work, sets a micro-batch's cost (~2.4 s addBatch).
+    The package's worker zip-directory cache already removed ~0.23 s
+    per task from it (see ``flink_1_12_0_spark.__doc__``).
+
     Semantics equal ``groupBy(*keys).applyInPandasWithState`` in update
     mode without timeouts, for per-key logic independent across keys:
     sharding only partitions keys, a key absent from a batch keeps its
