@@ -26,6 +26,16 @@ importers of one archive share that read through
 ``zipimport._zip_directory_cache``.  The driver and CPython >= 3.13 keep
 the stock method; delete ``_share_zip_directories`` once the workers run
 CPython >= 3.13.
+
+Worker warning filter.  PySpark's ``applyInPandasWithState`` output
+serializer pads the data and state frames to equal length with all-NA
+rows before ``pd.concat`` (``pyspark/sql/pandas/serializers.py``), and
+pandas >= 2.1 answers every such concat with a ``FutureWarning`` about
+all-NA entries.  Every stateful drain wrote one per task to stderr (24
+of the 29 stderr lines of a one-batch session-window drain over 10,000
+events), burying real worker errors.  Inside a worker the package
+ignores exactly that warning: that message, that category, raised from
+that module.
 """
 
 import sys
@@ -58,8 +68,24 @@ def _share_zip_directories() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-if "pyspark.worker" in sys.modules and sys.version_info < (3, 13):
-    _share_zip_directories()
+def _ignore_serializer_concat_warning() -> None:
+    """Drop the all-NA concat FutureWarning of PySpark's state serializer."""
+    import re
+    import warnings
+
+    warnings.filterwarnings(
+        "ignore",
+        message=re.escape("The behavior of DataFrame concatenation with empty "
+                          "or all-NA entries is deprecated"),
+        category=FutureWarning,
+        module=re.escape("pyspark.sql.pandas.serializers") + "$",
+    )
+
+
+if "pyspark.worker" in sys.modules:
+    _ignore_serializer_concat_warning()
+    if sys.version_info < (3, 13):
+        _share_zip_directories()
 
 from flink_1_12_0_spark.session import get_spark  # noqa: E402,F401
 from flink_1_12_0_spark.tables import load_tables  # noqa: E402,F401

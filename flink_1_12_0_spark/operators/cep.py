@@ -10,17 +10,34 @@ access), ONE/ALL ROWS PER MATCH with MATCH_NUMBER() and CLASSIFIER(), and
 MEASURES with FIRST/LAST/COUNT navigation — the surface the reference's
 MatchRecognizeITCase exercises.
 
-Spark has NO pattern-matching primitive.  Design:
-- batch: ``applyInPandas`` per partition key — sort by event time, run a
-  backtracking NFA over the row sequence, emit one row per match.  The
-  sequence scan is linear with small backtracking windows (quantifiers are
-  bounded by WITHIN); per-key sequences shard across executors, so 100 TB
-  scales by key cardinality like every keyed operator here.
-- streaming: same matcher over a per-key state buffer held by
-  ``streaming.stateful.sharded_keyed_process``.  AFTER MATCH SKIP PAST
-  LAST ROW only (overlapping modes would re-emit across batches); WITHIN
-  bounds the buffer exactly like the reference's NFA state cleanup —
-  unmatched prefixes older than the horizon are pruned.
+Spark has NO pattern-matching primitive.  Design — one match loop, as the
+reference runs one NFA for the Pattern API and SQL, batch and streaming:
+- ``_prepare`` turns time-sorted rows into a rows view, per-step predicate
+  masks and epoch seconds, and picks the matcher from what it observes:
+  the compiled regex over a per-row symbol alphabet when every DEFINE is
+  mask-able, the step chain compiles (strict loops, <=8 variables) and,
+  under WITHIN, time ascends; the backtracking NFA otherwise
+  (``_match_all_at``; ``_match_at`` is its first alternative).  The NFA is
+  the reference the property tests hold the regex path to.
+- ``_matches`` is the one enumerator: over a row range and an AFTER MATCH
+  mode it yields ``(anchor, spans, end)``.  ``_emit`` is the one emitter:
+  ONE/ALL ROWS PER MATCH rows with MATCH_NUMBER() and CLASSIFIER().
+- batch: ``mapInPandas`` over key-contiguous, time-sorted partitions —
+  ``_scan_partition`` scans a whole partition at once when the regex path
+  applies to it, else ``_scan`` runs per key group.  The sequence scan is
+  linear with small backtracking windows (quantifiers are bounded by
+  WITHIN); per-key sequences shard across executors, so 100 TB scales by
+  key cardinality like every keyed operator here.
+- timeouts: ``_timeout_scan`` takes the completed matches from the same
+  loop, then the longest prefix of every unconsumed partial match.
+- streaming: ``_stream_scan`` runs the same loop and emitter over a per-key
+  state buffer held by ``streaming.stateful.sharded_keyed_process``; the
+  buffer is consumed up to the end of the last accepted match, and the
+  key's match count rides in its state so MATCH_NUMBER() continues across
+  micro-batches.  AFTER MATCH SKIP PAST LAST ROW only (overlapping modes
+  would re-emit across batches); WITHIN bounds the buffer exactly like the
+  reference's NFA state cleanup — unmatched prefixes older than the
+  horizon are pruned.
 """
 
 from __future__ import annotations
@@ -132,8 +149,12 @@ class NavCtx:
         return self.rows[j][col] if j < len(self.rows) else None
 
 
+def _is_ctx(pred: Callable) -> bool:
+    return bool(getattr(pred, "needs_ctx", False))
+
+
 def _needs_ctx(step: Step) -> bool:
-    return bool(getattr(step.where, "needs_ctx", False))
+    return _is_ctx(step.where)
 
 
 def _predicate_masks(rows, steps: Sequence[Step]) -> dict[str, list[bool]]:
@@ -158,76 +179,22 @@ def _match_at(
     ts_col: str,
     masks: dict[str, list[bool]] | None = None,
     ts_sec: list[float] | None = None,
+    hi: int | None = None,
 ):
     """Greedy backtracking match of ``steps`` anchored at ``start`` over the
-    contiguous row window.  Returns {step_name: [row_idx, ...]} or None.
+    contiguous row window [start, hi): the FIRST alternative of
+    :func:`_match_all_at`'s backtracking order (greedy = longest span
+    first, backtracking down to min_times; reluctant = shortest admissible
+    span first).  Returns {step_name: [row_idx, ...]} or None — a first
+    alternative that matches nothing ends the anchor.
     ``masks``/``ts_sec`` are optional precomputed per-row predicate values /
     epoch seconds (see _predicate_masks)."""
-    n = len(rows)
-
-    def horizon_ok(end_idx: int) -> bool:
-        if within_s is None:
-            return True
-        if ts_sec is not None:
-            return ts_sec[end_idx] - ts_sec[start] <= within_s
-        return (rows[end_idx][ts_col] - rows[start][ts_col]).total_seconds() <= within_s
-
-    def rec(si: int, pos: int, spans):
-        if si == len(steps):
-            return spans
-        step = steps[si]
-        mask = masks.get(step.name) if masks else None
-        ctx_pred = _needs_ctx(step)
-        # relaxed internal contiguity skips non-matching rows BETWEEN
-        # iterations (first iteration stays anchored at pos); combinations
-        # degrades to relaxed on this single-match path (_match_all_at
-        # enumerates the branches)
-        relaxed = step.contiguity != "strict"
-        # collect the maximal taking (prefixes of it are the candidates)
-        cur: list[int] = []
-        i = pos
-        while (
-            i < n
-            and (step.max_times is None or len(cur) < step.max_times)
-            and horizon_ok(i)
-        ):
-            if ctx_pred:
-                ok = step.where(rows[i], NavCtx(rows, i, spans, step.name, cur))
-            elif mask is not None:
-                ok = mask[i]
-            else:
-                ok = step.where(rows[i])
-            if ok:
-                cur.append(i)
-            elif not (relaxed and cur):
-                break
-            i += 1
-        cnt = len(cur)
-        # greedy: longest span first, backtrack down to min_times;
-        # reluctant: shortest admissible span first
-        order = (
-            range(cnt, step.min_times - 1, -1)
-            if step.greedy
-            else range(step.min_times, cnt + 1)
-        )
-        for take in order:
-            taken = cur[:take]
-            res = rec(
-                si + 1,
-                (taken[-1] + 1) if taken else pos,
-                {**spans, step.name: taken},
-            )
-            if res is not None:
-                return res
-        return None
-
-    spans = rec(0, start, {})
-    if spans is None:
-        return None
-    used = [i for v in spans.values() for i in v]
-    if not used:
-        return None
-    return spans
+    spans = next(
+        _match_all_at(rows, start, steps, within_s, ts_col, masks, ts_sec, hi,
+                      keep_empty=True),
+        None,
+    )
+    return spans if spans and any(spans.values()) else None
 
 
 def _match_all_at(
@@ -238,13 +205,18 @@ def _match_all_at(
     ts_col: str,
     masks: dict[str, list[bool]] | None = None,
     ts_sec: list[float] | None = None,
+    hi: int | None = None,
+    keep_empty: bool = False,
 ):
     """Enumerate EVERY match anchored at ``start`` — the followedByAny
     (SKIP_TILL_ANY) path: ``_anygap`` filler steps branch over all
     admissible gap lengths (shortest first), while ordinary steps stay
     deterministic (their first workable take wins, exactly the single
-    branch :func:`_match_at` would pick).  Yields span dicts."""
-    n = len(rows)
+    branch :func:`_match_at` would pick).  Yields span dicts; with
+    ``keep_empty`` also the completions that matched no row (the
+    single-match path needs the first completion whatever it holds).
+    Rows at or past ``hi`` (default: the end) are never taken."""
+    n = len(rows) if hi is None else hi
 
     def horizon_ok(end_idx: int) -> bool:
         if within_s is None:
@@ -255,7 +227,7 @@ def _match_all_at(
 
     def rec(si: int, pos: int, spans):
         if si == len(steps):
-            if any(v for v in spans.values()):
+            if keep_empty or any(v for v in spans.values()):
                 yield spans
             return
         step = steps[si]
@@ -307,7 +279,10 @@ def _match_all_at(
                 )
             return
 
+        # relaxed internal contiguity skips non-matching rows BETWEEN
+        # iterations (first iteration stays anchored at pos)
         relaxed = step.contiguity != "strict"
+        # collect the maximal taking (prefixes of it are the candidates)
         cur: list[int] = []
         i = pos
         while (
@@ -321,6 +296,8 @@ def _match_all_at(
                 break
             i += 1
         cnt = len(cur)
+        # greedy: longest span first, backtrack down to min_times;
+        # reluctant: shortest admissible span first
         order = (
             range(cnt, step.min_times - 1, -1)
             if step.greedy
@@ -375,11 +352,22 @@ class Match:
         return len(self._span(step))
 
 
-def _prepare(pdf, steps, within_s, ts_col):
-    """Rows view + predicate masks + epoch seconds for one partition.
-    Vectorized when every ctx-free step has ``where_vec`` (no per-row
-    Python until a match's measures are read — navigating steps are
-    evaluated inside the NFA regardless), else per-row dicts."""
+def _prepare(pdf, steps, within_s, ts_col, key_starts=None):
+    """Rows view + predicate masks + epoch seconds for one partition, and
+    the scan path.  Vectorized when every ctx-free step has ``where_vec``
+    (no per-row Python until a match's measures are read — navigating
+    steps are evaluated inside the NFA regardless), else per-row dicts.
+
+    The fourth value picks the path of :func:`_matches`: ``(regex,
+    name->bit, symbol string)`` when every step is ctx-free with a mask,
+    the chain compiles (strict loops, <=8 variables) and, under WITHIN,
+    the timestamps ascend — rows arrive sorted by order_by whose head is
+    the time column, but an operator-API caller may order differently, so
+    verify.  ``key_starts`` (bool array) marks each key's first row when
+    ``pdf`` is a whole key-contiguous partition; time may drop there.
+    None means the backtracking NFA."""
+    import numpy as np
+
     if steps and all(s.where_vec is not None or _needs_ctx(s) for s in steps):
         rows = _ColRows(pdf)
         masks = {
@@ -394,26 +382,16 @@ def _prepare(pdf, steps, within_s, ts_col):
         rows = pdf.to_dict("records")
         masks = _predicate_masks(rows, steps)
         ts_sec = [r[ts_col].timestamp() for r in rows] if within_s is not None else None
-    return rows, masks, ts_sec
-
-
-def _emit_all_rows(out, rows, spans, measures, key_dict, data_cols, match_no):
-    """ALL ROWS PER MATCH: one output row per matched input row, in match
-    order, with running-semantics measures + CLASSIFIER of that row."""
-    pairs = sorted(
-        (i, var) for var, idxs in spans.items() for i in idxs
-    )
-    for ri, var in pairs:
-        running = {v: [x for x in idxs if x <= ri] for v, idxs in spans.items()}
-        m = Match(rows, running, match_no=match_no, classifier=var)
-        row = rows[ri]
-        out.append(
-            {
-                **key_dict,
-                **{c: row[c] for c in data_cols},
-                **{name: fn(m) for name, fn in measures},
-            }
-        )
+    regex = None
+    if all(not _needs_ctx(st) and st.name in masks for st in steps):
+        compiled = _compile_regex(steps)
+        ts_ok = ts_sec is None or bool(np.all(
+            (np.diff(ts_sec) >= 0) | (False if key_starts is None else key_starts[1:])
+        ))
+        if compiled is not None and ts_ok:
+            rx, bits = compiled
+            regex = rx, bits, _encode_symbols(masks, bits, len(rows))
+    return rows, masks, ts_sec, regex
 
 
 def _resume_index(after_match, spans, anchor: int, end: int) -> int:
@@ -446,7 +424,8 @@ def _compile_regex(steps: Sequence[Step], bits: dict[str, int] | None = None):
     Exact by construction: the NFA's backtracking order (leftmost anchor,
     greedy = longest-first / reluctant = shortest-first per step, strict
     contiguity) IS the re module's — an equivalence the test-suite
-    property-checks (test_cep_property.py).  Returns (regex, name->bit)
+    property-checks (tests/test_property_based.py::
+    test_cep_regex_path_matches_nfa).  Returns (regex, name->bit)
     or None when the chain has >8 distinct names (alphabet would blow up).
 
     ``bits`` pins an existing name->bit mapping (prefix compilation over an
@@ -493,52 +472,101 @@ def _encode_symbols(masks, names_bits, n: int) -> str:
     return "".join(map(chr, (arr + 0x100).tolist()))
 
 
-def _regex_scan_range(
-    rx, steps, s, rows, ts_sec, lo, hi, within_s, after_match, measures,
-    key_dict, rows_per_match, data_cols, out,
-):
-    """C-speed scan of row window [lo, hi): identical matches to the Python
-    NFA, found by the re engine over the symbol string.  WITHIN becomes an
-    ``endpos`` bound per anchor (ts ascending -> the horizon is a prefix of
-    the row window).  Row indices are global into ``rows``/``s``."""
+def _group_spans(m, steps) -> dict[str, list[int]]:
+    """A regex match's row spans per variable.  Plain assignment: a
+    repeated variable name keeps the LAST step's span — the NFA's rec()
+    does the same (a group that took no part reads (-1, -1): empty)."""
+    return {st.name: list(range(*m.span(gi))) for gi, st in enumerate(steps, 1)}
+
+
+def _matches(steps, rows, masks, ts_sec, regex, within_s, ts_col, after_match,
+             lo: int = 0, hi: int | None = None):
+    """The one match loop: yield ``(anchor, spans, end)`` for every match in
+    rows [lo, hi) (row indices global into ``rows``), resuming per
+    ``after_match`` — 'past_last_row', 'next_row', ('to_first'|'to_last',
+    var) — or, for 'no_skip', every match of every anchor, advancing one
+    row regardless (flink-cep NO_SKIP emission of SKIP_TILL_ANY patterns).
+
+    ``regex`` (from :func:`_prepare`) gives the C-speed scan: the re engine
+    over the symbol string finds exactly the NFA's matches, and WITHIN
+    becomes an ``endpos`` bound per anchor (ts ascending -> the horizon is
+    a prefix of the row window).  Otherwise the backtracking NFA runs from
+    every anchor row the first required step accepts."""
     from bisect import bisect_right
 
-    pos, match_no = lo, 0
+    hi = len(rows) if hi is None else hi
+    first = steps[0]
+    # anchor rows must satisfy the first required step (strict contiguity);
+    # no precomputed mask for ctx-aware first steps — the NFA checks those
+    anchor_mask = (
+        masks.get(first.name) if first.min_times > 0 and not _needs_ctx(first) else None
+    )
+    if after_match == "no_skip":
+        for i in range(lo, hi):
+            if anchor_mask is None or anchor_mask[i]:
+                for spans in _match_all_at(rows, i, steps, within_s, ts_col,
+                                           masks, ts_sec, hi):
+                    yield i, spans, max(ix for v in spans.values() for ix in v) + 1
+        return
+    pos = lo
     while pos < hi:
-        m = rx.search(s, pos, hi)
-        if not m:
-            break
-        i = m.start()
-        if within_s is not None:
-            # first index whose ts exceeds the horizon — same float
-            # predicate the NFA's horizon_ok uses (ts[j]-ts[i] <= within)
-            bound = bisect_right(
-                ts_sec, within_s, lo=i, hi=hi, key=lambda v: v - ts_sec[i]
-            )
-            if m.end() > bound:
-                m = rx.match(s, i, bound)
-                if not m:
-                    pos = i + 1
-                    continue
-        if m.end() == m.start():  # all-optional pattern matched nothing
-            pos = i + 1
-            continue
-        spans: dict[str, list[int]] = {}
-        for gi, st in enumerate(steps, 1):
-            a, b = m.span(gi)
-            # plain assignment: a repeated variable name keeps the LAST
-            # step's span — the Python NFA's rec() does the same
-            spans[st.name] = list(range(a, b)) if a >= 0 else []
-        match_no += 1
-        end = m.end()
-        last_var = max(spans.items(), key=lambda kv: kv[1][-1] if kv[1] else -1)[0]
-        if rows_per_match == "all":
-            _emit_all_rows(out, rows, spans, measures, key_dict, data_cols, match_no)
+        if regex is not None:
+            rx, _bits, sym = regex
+            m = rx.search(sym, pos, hi)
+            if not m:
+                return
+            i = m.start()
+            if within_s is not None:
+                # first index whose ts exceeds the horizon — same float
+                # predicate the NFA's horizon_ok uses (ts[j]-ts[i] <= within)
+                bound = bisect_right(
+                    ts_sec, within_s, lo=i, hi=hi, key=lambda v: v - ts_sec[i]
+                )
+                if m.end() > bound:
+                    m = rx.match(sym, i, bound)
+            # no match inside the horizon, or an all-optional pattern
+            # matched nothing: next anchor
+            if not m or m.end() == i:
+                pos = i + 1
+                continue
+            spans, end = _group_spans(m, steps), m.end()
         else:
-            mt = Match(rows, spans, match_no=match_no, classifier=last_var)
-            out.append({**key_dict, **{name: fn(mt) for name, fn in measures}})
+            i = pos
+            spans = (
+                None
+                if anchor_mask is not None and not anchor_mask[i]
+                else _match_at(rows, i, steps, within_s, ts_col, masks, ts_sec, hi)
+            )
+            if not spans:
+                pos = i + 1
+                continue
+            end = max(ix for v in spans.values() for ix in v) + 1
+        yield i, spans, end
         pos = _resume_index(after_match, spans, i, end)
-    return out
+
+
+def _emit(out, rows, found, measures, key_dict, rows_per_match: str = "one",
+          data_cols: Sequence[str] = (), match_no: int = 0) -> int:
+    """The one emitter: append the output rows of every ``(anchor, spans,
+    end)`` in ``found`` to ``out`` and return the last MATCH_NUMBER(),
+    counting on from ``match_no``.  ONE ROW PER MATCH: the measures, with
+    CLASSIFIER() = the variable of the match's last row.  ALL ROWS PER
+    MATCH: one output row per matched input row, in match order, with
+    running-semantics measures + CLASSIFIER of that row."""
+    for _anchor, spans, _end in found:
+        match_no += 1
+        if rows_per_match == "all":
+            for ri, var in sorted((i, v) for v, idxs in spans.items() for i in idxs):
+                running = {v: [x for x in idxs if x <= ri] for v, idxs in spans.items()}
+                m = Match(rows, running, match_no=match_no, classifier=var)
+                row = rows[ri]
+                out.append({**key_dict, **{c: row[c] for c in data_cols},
+                            **{name: fn(m) for name, fn in measures}})
+        else:
+            last_var = max(spans, key=lambda v: spans[v][-1] if spans[v] else -1)
+            m = Match(rows, spans, match_no=match_no, classifier=last_var)
+            out.append({**key_dict, **{name: fn(m) for name, fn in measures}})
+    return match_no
 
 
 def _scan_partition(
@@ -563,44 +591,23 @@ def _scan_partition(
         return None
     if any(s.name.startswith("_anygap") for s in steps):
         return None  # SKIP_TILL_ANY enumerates all matches — _scan handles it
-    compiled = _compile_regex(steps)
-    if compiled is None:
-        return None
-    rx, bits = compiled
-    n = len(pdf)
-    arr = np.zeros(n, dtype=np.uint32)
-    seen: set[str] = set()
-    for st in steps:
-        if st.name in seen:
-            continue
-        seen.add(st.name)
-        arr |= np.asarray(st.where_vec(pdf)).astype(bool) * np.uint32(bits[st.name])
-    s = "".join(map(chr, (arr + 0x100).tolist()))
-
     kdf = pdf[list(partition_by)]
     prev = kdf.shift()
     # null-safe change detection (NaN != NaN is True; both-null is "same")
     chg = ((kdf != prev) & ~(kdf.isna() & prev.isna())).any(axis=1).to_numpy()
     chg[0] = True
+    rows, masks, ts_sec, regex = _prepare(pdf, steps, within_s, ts_col, chg)
+    if regex is None:
+        return None  # >8 variables, or time not ascending within a group
     starts = np.flatnonzero(chg)
-    ends = np.append(starts[1:], n)
-
-    ts_sec = None
-    if within_s is not None:
-        ts_sec = pdf[ts_col].astype("int64").to_numpy() / 1e9
-        # ascending within every group (boundaries exempt) or fall back
-        if n > 1 and not bool(np.all((ts_sec[1:] >= ts_sec[:-1]) | chg[1:])):
-            return None
-
-    rows = _ColRows(pdf)
+    ends = np.append(starts[1:], len(pdf))
     key_cols = {c: rows._cols[c] for c in partition_by}
     out: list[dict] = []
     for a, b in zip(starts.tolist(), ends.tolist()):
         key_dict = {c: key_cols[c][a] for c in partition_by}
-        _regex_scan_range(
-            rx, steps, s, rows, ts_sec, a, b, within_s, after_match,
-            measures, key_dict, rows_per_match, data_cols, out,
-        )
+        found = _matches(steps, rows, masks, ts_sec, regex, within_s, ts_col,
+                         after_match, a, b)
+        _emit(out, rows, found, measures, key_dict, rows_per_match, data_cols)
     return out
 
 
@@ -608,8 +615,8 @@ def _scan(
     pdf, steps, within_s, ts_col, after_match, measures, key_dict,
     rows_per_match: str = "one", data_cols: Sequence[str] = (),
 ):
-    out = []
-    rows, masks, ts_sec = _prepare(pdf, steps, within_s, ts_col)
+    """One key group's matches over its time-sorted rows, emitted."""
+    rows, masks, ts_sec, regex = _prepare(pdf, steps, within_s, ts_col)
     # followedByAny / allowCombinations (SKIP_TILL_ANY) mode: enumerate ALL
     # matches per anchor and advance one row regardless (flink-cep NO_SKIP
     # emission) — the first-match regex fast path and after-match skipping
@@ -618,67 +625,48 @@ def _scan(
         st.name.startswith("_anygap") or st.contiguity == "combinations"
         for st in steps
     ):
-        anchor_mask = (
-            masks.get(steps[0].name)
-            if steps[0].min_times > 0 and not _needs_ctx(steps[0])
-            else None
-        )
-        match_no = 0
-        for i in range(len(rows)):
-            if anchor_mask is not None and not anchor_mask[i]:
-                continue
-            for spans in _match_all_at(rows, i, steps, within_s, ts_col, masks, ts_sec):
-                match_no += 1
-                last_var = max(
-                    spans.items(), key=lambda kv: kv[1][-1] if kv[1] else -1
-                )[0]
-                if rows_per_match == "all":
-                    _emit_all_rows(out, rows, spans, measures, key_dict, data_cols, match_no)
-                else:
-                    m = Match(rows, spans, match_no=match_no, classifier=last_var)
-                    out.append({**key_dict, **{name: fn(m) for name, fn in measures}})
-        return out
-    # Fast path: every step ctx-free (mask precomputed) -> the backtracking
-    # scan compiles to a regex over a per-row symbol alphabet and runs at C
-    # speed.  WITHIN additionally needs an ascending ts sequence (it is —
-    # rows arrive sorted by order_by whose head is the time column — but an
-    # operator-API caller may order differently, so verify).
-    if all(not _needs_ctx(st) and st.name in masks for st in steps):
-        compiled = _compile_regex(steps)
-        ts_ok = within_s is None or all(
-            ts_sec[i] <= ts_sec[i + 1] for i in range(len(ts_sec) - 1)
-        )
-        if compiled is not None and ts_ok:
-            rx, bits = compiled
-            s = _encode_symbols(masks, bits, len(rows))
-            return _regex_scan_range(
-                rx, steps, s, rows, ts_sec, 0, len(rows), within_s,
-                after_match, measures, key_dict, rows_per_match, data_cols, [],
-            )
-    # anchor rows must satisfy the first required step (strict contiguity);
-    # no precomputed mask for ctx-aware first steps — the NFA checks those
-    anchor_mask = (
-        masks.get(steps[0].name) if steps[0].min_times > 0 else None
-    )
-    i, match_no = 0, 0
-    while i < len(rows):
-        if anchor_mask is not None and not anchor_mask[i]:
-            i += 1
-            continue
-        spans = _match_at(rows, i, steps, within_s, ts_col, masks, ts_sec)
-        if spans:
-            match_no += 1
-            end = max(ix for v in spans.values() for ix in v) + 1
-            last_var = max(spans.items(), key=lambda kv: kv[1][-1] if kv[1] else -1)[0]
-            if rows_per_match == "all":
-                _emit_all_rows(out, rows, spans, measures, key_dict, data_cols, match_no)
-            else:
-                m = Match(rows, spans, match_no=match_no, classifier=last_var)
-                out.append({**key_dict, **{name: fn(m) for name, fn in measures}})
-            i = _resume_index(after_match, spans, i, end)
-        else:
-            i += 1
+        after_match = "no_skip"
+    out: list[dict] = []
+    found = _matches(steps, rows, masks, ts_sec, regex, within_s, ts_col, after_match)
+    _emit(out, rows, found, measures, key_dict, rows_per_match, data_cols)
     return out
+
+
+def _per_key_map(df, partition_by, order_by, out_schema, cols, scan_group,
+                 scan_whole=None) -> DataFrame:
+    """A batch CEP operator's plan: one shuffle on the match key, Tungsten
+    sort, then a single Python pass per partition — rows arrive
+    key-contiguous and time-ordered (batch order preserved across Arrow
+    chunks).  ``scan_whole(pdf)`` may scan the whole partition at once
+    (None: not applicable); else ``scan_group(pdf, key_dict)`` runs per key
+    group, in arrival order (groupby sort=False; dropna=False keeps
+    NULL-keyed groups).  Per-key applyInPandas pays one Arrow round-trip
+    per group — with high key cardinality (the normal CEP shape) that
+    overhead dominates; mapInPandas amortizes it across the whole
+    partition.  Scales by key hash at 100 TB like any keyed op."""
+
+    def run_partition(batches):
+        import pandas as pd
+
+        frames = [b for b in batches if not b.empty]
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+        out = scan_whole(pdf) if scan_whole is not None else None
+        if out is None:
+            out = []
+            for key, g in pdf.groupby(partition_by, sort=False, dropna=False):
+                key_t = key if isinstance(key, tuple) else (key,)
+                out.extend(scan_group(g.reset_index(drop=True),
+                                      dict(zip(partition_by, key_t))))
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+
+    return (
+        df.repartition(*partition_by)
+        .sortWithinPartitions(*partition_by, *order_by)
+        .mapInPandas(run_partition, out_schema)
+    )
 
 
 def match_recognize(
@@ -703,49 +691,21 @@ def match_recognize(
     or ('to_first'|'to_last', var).
     """
     partition_by = list(partition_by)
-    order_by = list(order_by)
     data_cols = list(data_cols)
 
     cols = partition_by + data_cols + [name for name, _ in measures]
-
-    def run_partition(batches):
-        import pandas as pd
-
-        frames = [b for b in batches if not b.empty]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        # rows arrive key-contiguous and time-ordered (JVM sort below, batch
-        # order preserved across Arrow chunks):
-        # whole-partition vectorized scan when every DEFINE is vectorizable
-        out = _scan_partition(
+    # whole-partition vectorized scan when every DEFINE is vectorizable,
+    # else the general per-key path
+    return _per_key_map(
+        df, partition_by, order_by, out_schema, cols,
+        lambda g, key_dict: _scan(
+            g, steps, within, ts_col, after_match, measures, key_dict,
+            rows_per_match, data_cols,
+        ),
+        lambda pdf: _scan_partition(
             pdf, partition_by, steps, within, ts_col, after_match,
             measures, rows_per_match, data_cols,
-        )
-        if out is None:
-            out = []
-            # general path: groupby(sort=False) preserves arrival order
-            for key, g in pdf.groupby(partition_by, sort=False, dropna=False):
-                key_t = key if isinstance(key, tuple) else (key,)
-                out.extend(
-                    _scan(
-                        g.reset_index(drop=True), steps, within, ts_col,
-                        after_match, measures, dict(zip(partition_by, key_t)),
-                        rows_per_match, data_cols,
-                    )
-                )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    # One shuffle on the match key, Tungsten sort, then a single Python pass
-    # per partition (pandas groupby iteration).  Per-key applyInPandas pays
-    # one Arrow round-trip per group — with high key cardinality (the normal
-    # CEP shape) that overhead dominates; mapInPandas amortizes it across
-    # the whole partition.  Scales by key hash at 100 TB like any keyed op.
-    return (
-        df.repartition(*partition_by)
-        .sortWithinPartitions(*partition_by, *order_by)
-        .mapInPandas(run_partition, out_schema)
+        ),
     )
 
 
@@ -753,7 +713,7 @@ def _timeout_scan(pdf, steps, within_s, ts_col, measures, key_dict):
     """One key group's timed-out partial matches (see match_timeouts)."""
     from bisect import bisect_right
 
-    rows, masks, ts_sec = _prepare(pdf, steps, within_s, ts_col)
+    rows, masks, ts_sec, regex = _prepare(pdf, steps, within_s, ts_col)
     n = len(rows)
     if not all(not _needs_ctx(st) and st.name in masks for st in steps):
         raise ValueError(
@@ -765,15 +725,13 @@ def _timeout_scan(pdf, steps, within_s, ts_col, measures, key_dict):
             "(skip_till_next/allowCombinations partials have no single "
             "longest-prefix span)"
         )
-    compiled = _compile_regex(steps)
-    if compiled is None:
-        raise ValueError("timeout side-output limited to <=8 pattern variables")
-    rx, bits = compiled
-    s = _encode_symbols(masks, bits, n)
-    if within_s is not None and any(
-        ts_sec[i] > ts_sec[i + 1] for i in range(n - 1)
-    ):
-        raise ValueError("WITHIN timeout scan requires ascending timestamps")
+    if regex is None:
+        raise ValueError(
+            "timeout side-output limited to <=8 pattern variables"
+            if _compile_regex(steps) is None
+            else "WITHIN timeout scan requires ascending timestamps"
+        )
+    _rx, bits, s = regex
     # prefix automata (steps[:j], longest first) over the SAME alphabet
     prefixes = [
         (j, _compile_regex(steps[:j], bits)[0])
@@ -782,25 +740,10 @@ def _timeout_scan(pdf, steps, within_s, ts_col, measures, key_dict):
     # pass 1: completed matches (SKIP PAST LAST ROW) -> consumed intervals
     consumed = bytearray(n)
     consumed_starts: list[int] = []
-    pos = 0
-    while pos < n:
-        m = rx.search(s, pos)
-        if not m:
-            break
-        i = m.start()
-        if within_s is not None:
-            bound = bisect_right(ts_sec, within_s, lo=i, key=lambda v: v - ts_sec[i])
-            if m.end() > bound:
-                m = rx.match(s, i, bound)
-                if not m:
-                    pos = i + 1
-                    continue
-        if m.end() == m.start():
-            pos = i + 1
-            continue
-        consumed[m.start() : m.end()] = b"\x01" * (m.end() - m.start())
-        consumed_starts.append(m.start())
-        pos = m.end()
+    for i, _spans, end in _matches(steps, rows, masks, ts_sec, regex, within_s,
+                                   ts_col, "past_last_row"):
+        consumed[i:end] = b"\x01" * (end - i)
+        consumed_starts.append(i)
     # pass 2: every unconsumed row that begins a partial match -> its
     # longest greedy prefix, clipped at the next completed match / horizon.
     # Anchors are rows accepted by ANY state reachable at position 0 —
@@ -830,19 +773,11 @@ def _timeout_scan(pdf, steps, within_s, ts_col, measures, key_dict):
         for jlen, prx in prefixes:
             pm = prx.match(s, i, hi)
             if pm and pm.end() > i:
-                spans = {}
-                for gi, st in enumerate(steps[:jlen], 1):
-                    a, b = pm.span(gi)
-                    spans[st.name] = list(range(a, b)) if a >= 0 else []
+                spans = _group_spans(pm, steps[:jlen])
                 for st in steps[jlen:]:
                     spans.setdefault(st.name, [])
-                last_var = max(
-                    spans.items(), key=lambda kv: kv[1][-1] if kv[1] else -1
-                )[0]
-                mt = Match(rows, spans, classifier=last_var)
-                out.append(
-                    {**key_dict, **{nm: f(mt) for nm, f in measures}}
-                )
+                # a timed-out partial is no match: MATCH_NUMBER() reads 1
+                _emit(out, rows, [(i, spans, pm.end())], measures, key_dict)
                 break
     return out
 
@@ -875,95 +810,28 @@ def match_timeouts(
     Batch end-of-input plays the role of the final watermark: pending
     partials time out, as the reference does on input end."""
     partition_by = list(partition_by)
-    order_by = list(order_by)
     cols = partition_by + [name for name, _ in measures]
-
-    def run_partition(batches):
-        import pandas as pd
-
-        frames = [b for b in batches if not b.empty]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        out = []
-        for key, g in pdf.groupby(partition_by, sort=False, dropna=False):
-            key_t = key if isinstance(key, tuple) else (key,)
-            out.extend(
-                _timeout_scan(
-                    g.reset_index(drop=True), steps, within, ts_col,
-                    measures, dict(zip(partition_by, key_t)),
-                )
-            )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    return (
-        df.repartition(*partition_by)
-        .sortWithinPartitions(*partition_by, *order_by)
-        .mapInPandas(run_partition, out_schema)
+    return _per_key_map(
+        df, partition_by, order_by, out_schema, cols,
+        lambda g, key_dict: _timeout_scan(
+            g, steps, within, ts_col, measures, key_dict
+        ),
     )
 
 
-def _stream_scan(pdf, steps, within, ts_col, measures, key_dict):
+def _stream_scan(pdf, steps, within, ts_col, measures, key_dict, match_no: int = 0):
     """Streaming buffer scan (AFTER MATCH SKIP PAST LAST ROW): returns
     (out_rows, consumed_until).  Unmatched rows before ``consumed_until``
     stay in the key's state buffer for future batches, so the resume index
-    only advances past ACCEPTED matches.  Regex fast path when every
-    DEFINE is mask-able (same dispatch as the batch scan)."""
-    from bisect import bisect_right
-
-    rows, masks, ts_sec = _prepare(pdf, steps, within, ts_col)
-    n = len(rows)
-    if all(not _needs_ctx(st) and st.name in masks for st in steps):
-        compiled = _compile_regex(steps)
-        ts_ok = within is None or all(
-            ts_sec[i] <= ts_sec[i + 1] for i in range(n - 1)
-        )
-        if compiled is not None and ts_ok:
-            rx, bits = compiled
-            s = _encode_symbols(masks, bits, n)
-            out: list[dict] = []
-            pos = consumed = 0
-            while pos < n:
-                m = rx.search(s, pos)
-                if not m:
-                    break
-                i = m.start()
-                if within is not None:
-                    bound = bisect_right(
-                        ts_sec, within, lo=i, key=lambda v: v - ts_sec[i]
-                    )
-                    if m.end() > bound:
-                        m = rx.match(s, i, bound)
-                        if not m:
-                            pos = i + 1
-                            continue
-                if m.end() == m.start():
-                    pos = i + 1
-                    continue
-                spans = {}
-                for gi, st in enumerate(steps, 1):
-                    a, b = m.span(gi)
-                    spans[st.name] = list(range(a, b)) if a >= 0 else []
-                mt = Match(rows, spans)
-                out.append({**key_dict, **{nm: f(mt) for nm, f in measures}})
-                pos = consumed = m.end()
-            return out, consumed
-    anchor_mask = masks.get(steps[0].name) if steps[0].min_times > 0 else None
-    out, i, consumed = [], 0, 0
-    while i < n:
-        if anchor_mask is not None and not anchor_mask[i]:
-            i += 1
-            continue
-        spans = _match_at(rows, i, steps, within, ts_col, masks, ts_sec)
-        if spans:
-            mt = Match(rows, spans)
-            out.append({**key_dict, **{nm: f(mt) for nm, f in measures}})
-            i = max(ix for v in spans.values() for ix in v) + 1
-            consumed = i
-        else:
-            i += 1
-    return out, consumed
+    only advances past ACCEPTED matches: it is the end of the last one.
+    Same match loop and emitter as the batch scan; MATCH_NUMBER() counts
+    on from ``match_no``, the key's matches in earlier micro-batches."""
+    rows, masks, ts_sec, regex = _prepare(pdf, steps, within, ts_col)
+    found = list(_matches(steps, rows, masks, ts_sec, regex, within, ts_col,
+                          "past_last_row"))
+    out: list[dict] = []
+    _emit(out, rows, found, measures, key_dict, match_no=match_no)
+    return out, found[-1][2] if found else 0
 
 
 def match_recognize_stream(
@@ -981,14 +849,19 @@ def match_recognize_stream(
     Per-key state buffers unmatched rows; matched prefixes are consumed,
     rows older than ``within`` below the key's max event time are pruned —
     the same cleanup contract as the reference NFA's WITHIN handling.
+    The key's match count rides in the same state, so MATCH_NUMBER()
+    numbers a key's matches as the batch operator does.
     """
-    if any(s.contiguity == "combinations" for s in steps):
-        # SKIP_TILL_ANY emits every subset branch; the streaming buffer's
-        # consumed-prefix contract (single match per anchor, resume past
-        # it) cannot represent that without re-emitting across batches.
+    if any(s.contiguity == "combinations" or s.name.startswith("_anygap")
+           for s in steps):
+        # SKIP_TILL_ANY emits every subset branch / every gap alternative;
+        # the streaming buffer's consumed-prefix contract (single match per
+        # anchor, resume past it) cannot represent that without
+        # re-emitting across batches.
         raise ValueError(
-            "allowCombinations() loops are batch-only (same restriction "
-            "class as PREV/NEXT navigation in streaming MATCH_RECOGNIZE)"
+            "allowCombinations() loops and followedByAny() are batch-only "
+            "(same restriction class as PREV/NEXT navigation in streaming "
+            "MATCH_RECOGNIZE)"
         )
 
     from flink_1_12_0_spark.streaming.stateful import sharded_keyed_process
@@ -1000,9 +873,9 @@ def match_recognize_stream(
     def fn(key, pdfs, state):
         import pandas as pd
 
-        # state: the key's unconsumed buffer as a pandas frame of the data
-        # columns, in the dtypes the batches carried
-        held = state.get if state.exists else None
+        # state: (the key's unconsumed buffer as a pandas frame of the data
+        # columns, in the dtypes the batches carried; its match count)
+        held, match_no = state.get if state.exists else (None, 0)
         frames = [f[data_cols] for f in (held, *pdfs) if f is not None and not f.empty]
         if not frames:
             return
@@ -1013,7 +886,7 @@ def match_recognize_stream(
         )
         key_dict = dict(zip(partition_by, key))
         out, consumed_until = _stream_scan(
-            pdf, steps, within, ts_col, measures, key_dict
+            pdf, steps, within, ts_col, measures, key_dict, match_no
         )
         # retain unconsumed suffix within the time horizon
         horizon = pdf[ts_col].iloc[-1].timestamp() - within
@@ -1021,11 +894,43 @@ def match_recognize_stream(
         if not keep.empty:
             es = keep[ts_col].astype("int64").to_numpy() / 1e9
             keep = keep[es >= horizon]
-        state.update(keep.reset_index(drop=True))
+        state.update((keep.reset_index(drop=True), match_no + len(out)))
         if out:
             yield pd.DataFrame(out)
 
     return sharded_keyed_process(sdf, partition_by, fn, out_schema)
+
+
+def _combine(step: Step, op: str, cond: Callable, cond_vec: Callable | None) -> Step:
+    """``step`` with ``cond`` folded into its predicate — the one
+    ctx-aware combinator behind Pattern.where (``op='and'``), or_
+    (``'or'``) and until (``'unless'``: accept iff not cond and the old
+    predicate).  It short-circuits like Python's ``and``/``or`` (until
+    tests ``cond`` first); the result navigates (``needs_ctx``) when
+    either side does and hands the NavCtx only to a side that takes one
+    (flink-cep IterativeCondition).  The vectorized mask combines only
+    when both sides provide one."""
+    first, second = (cond, step.where) if op == "unless" else (step.where, cond)
+    first_ctx, second_ctx = _is_ctx(first), _is_ctx(second)
+
+    def combined(r, ctx=None):
+        a = first(r, ctx) if first_ctx else first(r)
+        if op == "unless":
+            a = not a
+        if bool(a) == (op == "or"):
+            return a
+        return second(r, ctx) if second_ctx else second(r)
+
+    combined.needs_ctx = first_ctx or second_ctx
+    vec = None
+    if step.where_vec is not None and cond_vec is not None:
+        old_vec = step.where_vec
+        vec = {
+            "and": lambda pdf: old_vec(pdf) & cond_vec(pdf),
+            "or": lambda pdf: old_vec(pdf) | cond_vec(pdf),
+            "unless": lambda pdf: old_vec(pdf) & ~cond_vec(pdf),
+        }[op]
+    return replace(step, where=combined, where_vec=vec)
 
 
 def _and_not_next_guard(base: Callable, anchor: str, neg: Callable) -> Callable:
@@ -1034,8 +939,8 @@ def _and_not_next_guard(base: Callable, anchor: str, neg: Callable) -> Callable:
     negated condition.  Position-dependent, so the result is a
     ctx-navigating predicate (evaluated per partial match, never
     mask-precomputed — the flink-cep IterativeCondition analog)."""
-    base_ctx = bool(getattr(base, "needs_ctx", False))
-    neg_ctx = bool(getattr(neg, "needs_ctx", False))
+    base_ctx = _is_ctx(base)
+    neg_ctx = _is_ctx(neg)
 
     def combined(r, ctx=None):
         if ctx is not None:
@@ -1179,25 +1084,7 @@ class Pattern:
         """Pattern.where (Pattern.java:157): AND-combines ``cond`` with
         the LAST variable's existing condition — repeated where() calls
         conjoin, the dual of :meth:`or_`."""
-        s = self._steps[-1]
-        old = s.where
-        old_ctx = bool(getattr(old, "needs_ctx", False))
-        new_ctx = bool(getattr(cond, "needs_ctx", False))
-        if old_ctx or new_ctx:
-            def combined(r, ctx=None):
-                a = old(r, ctx) if old_ctx else old(r)
-                return a and (cond(r, ctx) if new_ctx else cond(r))
-
-            combined.needs_ctx = True
-        else:
-            def combined(r):
-                return old(r) and cond(r)
-
-        vec = None
-        if s.where_vec is not None and cond_vec is not None:
-            old_vec = s.where_vec
-            vec = lambda pdf: old_vec(pdf) & cond_vec(pdf)  # noqa: E731
-        self._steps[-1] = replace(s, where=combined, where_vec=vec)
+        self._steps[-1] = _combine(self._steps[-1], "and", cond, cond_vec)
         return self
 
     def times_or_more(self, n: int) -> "Pattern":
@@ -1220,25 +1107,7 @@ class Pattern:
         ``pattern.where(c1).or(c2)``): the variable accepts an event
         satisfying EITHER predicate.  Vectorized masks combine only when
         both sides provide one."""
-        s = self._steps[-1]
-        old = s.where
-        old_ctx = bool(getattr(old, "needs_ctx", False))
-        new_ctx = bool(getattr(where, "needs_ctx", False))
-        if old_ctx or new_ctx:
-            def combined(r, ctx=None):
-                a = old(r, ctx) if old_ctx else old(r)
-                return a or (where(r, ctx) if new_ctx else where(r))
-
-            combined.needs_ctx = True
-        else:
-            def combined(r):
-                return old(r) or where(r)
-
-        vec = None
-        if s.where_vec is not None and where_vec is not None:
-            old_vec = s.where_vec
-            vec = lambda pdf: old_vec(pdf) | where_vec(pdf)  # noqa: E731
-        self._steps[-1] = replace(s, where=combined, where_vec=vec)
+        self._steps[-1] = _combine(self._steps[-1], "or", where, where_vec)
         return self
 
     def until(self, cond: Callable) -> "Pattern":
@@ -1252,26 +1121,8 @@ class Pattern:
         s = self._steps[-1]
         if s.max_times is not None:
             raise ValueError("until() applies to an unbounded loop (oneOrMore)")
-        old = s.where
-        old_ctx = bool(getattr(old, "needs_ctx", False))
-        cond_ctx = bool(getattr(cond, "needs_ctx", False))
-        if old_ctx or cond_ctx:
-            def guarded(r, ctx=None):
-                stop = cond(r, ctx) if cond_ctx else cond(r)
-                if stop:
-                    return False
-                return old(r, ctx) if old_ctx else old(r)
-
-            guarded.needs_ctx = True
-        else:
-            def guarded(r):
-                return not cond(r) and old(r)
-
-        vec = None
-        if s.where_vec is not None and not cond_ctx and getattr(cond, "vec", None):
-            old_vec = s.where_vec
-            vec = lambda pdf: old_vec(pdf) & ~cond.vec(pdf)  # noqa: E731
-        self._steps[-1] = replace(s, where=guarded, where_vec=vec)
+        vec = None if _is_ctx(cond) else getattr(cond, "vec", None)
+        self._steps[-1] = _combine(s, "unless", cond, vec)
         return self
 
     def times(self, lo: int, hi: int | None = None) -> "Pattern":

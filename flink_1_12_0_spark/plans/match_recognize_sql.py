@@ -68,9 +68,6 @@ class MRSpec:
     after_match: "str | tuple" = "past_last_row"
     select_cols: list[str] = field(default_factory=list)
     rows_per_match: str = "one"  # 'one' | 'all'
-    #: raw DEFINE predicate SQL per var (var prefixes stripped) — feeds the
-    #: optional JVM-side key prefilter in run_match_recognize
-    define_sql: dict[str, str] = field(default_factory=dict)
     #: SUBSET unions: name -> tuple of base pattern variables
     subsets: dict[str, tuple] = field(default_factory=dict)
 
@@ -639,20 +636,8 @@ def parse_match_recognize(sql: str) -> MRSpec:
         if not dm:
             raise ValueError(f"bad DEFINE item: {item!r}")
         spec.define[dm.group(1)] = compile_predicate(dm.group(2))
-        spec.define_sql[dm.group(1)] = _strip_var_prefixes(dm.group(2))
 
     return spec
-
-
-def _strip_var_prefixes(text: str) -> str:
-    """``E.event_type = 'x'`` → ``event_type = 'x'`` (quote-aware): the
-    DEFINE grammar minus variable prefixes is valid Spark SQL, which is
-    what lets the key prefilter push predicates JVM-side."""
-    parts = re.split(r"('(?:[^']|'')*')", text)
-    return "".join(
-        p if p.startswith("'") else re.sub(r"\b[A-Za-z_]\w*\.(?=\w)", "", p)
-        for p in parts
-    )
 
 
 # ----------------------------------------------------------------- execution
@@ -754,45 +739,12 @@ def _compile(spec: MRSpec, df: DataFrame):
     return steps, measures, schema, data_cols
 
 
-def run_match_recognize(
-    spark, sql: str, df: DataFrame | None = None, prefilter: bool = False
-) -> DataFrame:
+def run_match_recognize(spark, sql: str, df: DataFrame | None = None) -> DataFrame:
     """Parse + execute a batch MATCH_RECOGNIZE query.  ``df`` overrides the
-    FROM table (else resolved from the session catalog / temp views).
-
-    ``prefilter=True`` adds a JVM-side key prefilter before the Python NFA:
-    a key is kept only if it has at least one row satisfying EVERY required
-    (min>0, non-navigating) step's DEFINE predicate — a necessary condition
-    for any match.  One aggregation on the match key (whose shuffle the NFA
-    stage reuses) + a semi-join; on anchor-sparse data (the normal CEP
-    shape at 100 TB — rare error/fraud patterns) this drops most keys
-    before any Python runs.  Off by default: on anchor-dense data it only
-    adds a pass."""
-    from pyspark.sql import functions as F
-
+    FROM table (else resolved from the session catalog / temp views)."""
     spec = parse_match_recognize(sql)
     src = df if df is not None else spark.table(spec.table)
     src = src.select(*_needed_cols(spec, src))
-    if prefilter:
-        req = [
-            spec.define_sql[var]
-            for var, lo, _hi, _greedy in spec.pattern
-            if lo > 0
-            and var in spec.define_sql
-            and not getattr(spec.define.get(var), "needs_ctx", False)
-        ]
-        if req and spec.partition_by:
-            aggs = [
-                F.max(F.when(F.expr(s), 1).otherwise(0)).alias(f"_f{i}")
-                for i, s in enumerate(req)
-            ]
-            ok = (
-                src.groupBy(*spec.partition_by)
-                .agg(*aggs)
-                .where(" AND ".join(f"_f{i} = 1" for i in range(len(req))))
-                .select(*spec.partition_by)
-            )
-            src = src.join(ok, spec.partition_by, "left_semi")
     steps, measures, schema, data_cols = _compile(spec, src)
     return match_recognize(
         src,
@@ -811,14 +763,17 @@ def run_match_recognize(
 
 def run_match_recognize_stream(spark, sql: str, sdf: DataFrame) -> DataFrame:
     """Streaming MATCH_RECOGNIZE over ``sdf`` (needs WITHIN for state
-    cleanup, AFTER MATCH SKIP PAST LAST ROW only — operator contract)."""
+    cleanup; ONE ROW PER MATCH and AFTER MATCH SKIP PAST LAST ROW only —
+    the operator contract: the state buffer keeps only rows after the last
+    match, so an overlapping mode such as SKIP TO NEXT ROW would drop the
+    matches batch mode finds, and is rejected instead)."""
     spec = parse_match_recognize(sql)
     if spec.within_s is None:
         raise ValueError("streaming MATCH_RECOGNIZE requires WITHIN")
-    if spec.rows_per_match != "one" or not isinstance(spec.after_match, str):
+    if spec.rows_per_match != "one" or spec.after_match != "past_last_row":
         raise ValueError(
             "streaming MATCH_RECOGNIZE supports ONE ROW PER MATCH and "
-            "SKIP PAST LAST ROW / TO NEXT ROW only"
+            "AFTER MATCH SKIP PAST LAST ROW only"
         )
     if any(getattr(p, "phys_nav", False) for p in spec.define.values()):
         # PREV/NEXT are physical offsets over the PARTITION; the streaming

@@ -357,6 +357,24 @@ def test_stream_rejects_allow_combinations(spark):
         )
 
 
+def test_stream_rejects_followed_by_any(spark):
+    """followedByAny emits every alternative in batch; the streaming
+    buffer keeps one match per anchor, so it must refuse, not diverge."""
+    import pytest
+
+    from flink_1_12_0_spark.operators.cep import match_recognize_stream
+
+    pat = Pattern.begin("A", lambda r: r["typ"] == "a").followed_by_any(
+        "C", lambda r: r["typ"] == "c"
+    )
+    with pytest.raises(ValueError, match="batch-only"):
+        match_recognize_stream(
+            _df(spark, "acc"), ["k"], ["ts"], pat._steps,
+            [("c_v", lambda m: m.first("C", "v"))],
+            "k bigint, c_v double", within=60.0,
+        )
+
+
 def test_where_conjoins_and_times_or_more(spark):
     """where() ANDs with the existing condition (Pattern.java:157);
     timesOrMore sets an unbounded lower-bounded loop."""

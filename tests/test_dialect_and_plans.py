@@ -381,34 +381,85 @@ def test_mr_skip_to_first_loop_guard(spark):
         run_match_recognize(spark, sql, df=df).collect()
 
 
-def test_mr_prefilter_equivalence(spark):
-    """The JVM-side key prefilter is a pure optimization: identical output,
-    and keys without any anchor row never reach the Python NFA."""
+def _mr_two_batch_stream(spark, tmp_path, pdf, cut):
+    """``pdf``'s rows as a file stream of two micro-batches: rows[:cut],
+    then rows[cut:]."""
+    src = str(tmp_path / "src")
+    for part in (pdf.iloc[:cut], pdf.iloc[cut:]):
+        spark.createDataFrame(part).coalesce(1).write.mode("append").parquet(src)
+    schema = spark.createDataFrame(pdf).schema
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(src))
+
+
+_MR_AB = """
+    SELECT * FROM t MATCH_RECOGNIZE (
+        PARTITION BY k ORDER BY ts
+        MEASURES MATCH_NUMBER() AS mno, CLASSIFIER() AS cls,
+                 COUNT(A.*) AS n_a, LAST(B.v) AS b_v
+        AFTER MATCH {skip}
+        PATTERN (A+ B)
+        WITHIN INTERVAL '1' DAY
+        DEFINE A AS A.typ = 'a', B AS B.typ = 'b'
+    )"""
+
+
+def _mr_rows(typs, k=1):
     import pandas as pd
 
-    from flink_1_12_0_spark.plans.match_recognize_sql import run_match_recognize
+    return pd.DataFrame({
+        "k": [k] * len(typs),
+        "ts": pd.date_range("2024-01-01", periods=len(typs), freq="s"),
+        "typ": list(typs),
+        "v": [float(i) for i in range(len(typs))],
+    })
 
-    pdf = pd.DataFrame(
-        {
-            "k": [1, 1, 2, 2, 3, 3],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00:%02d" % i for i in range(6)]
-            ),
-            "typ": ["e", "p", "x", "x", "e", "p"],
-        }
+
+def test_mr_stream_rejects_skip_to_next_row(spark, tmp_path):
+    """SKIP TO NEXT ROW overlaps matches: on ``a a b`` batch mode finds
+    two, but the streaming buffer resumes past the last row and would
+    emit one.  Streaming must refuse it, as it refuses ALL ROWS."""
+    import pytest
+
+    from flink_1_12_0_spark.plans.match_recognize_sql import (
+        run_match_recognize,
+        run_match_recognize_stream,
     )
-    df = spark.createDataFrame(pdf)
-    sql = """
-        SELECT * FROM t MATCH_RECOGNIZE (
-            PARTITION BY k ORDER BY ts
-            MEASURES COUNT(A.*) AS n
-            PATTERN (A B)
-            DEFINE A AS A.typ = 'e', B AS B.typ = 'p'
-        )"""
-    plain = sorted(map(tuple, run_match_recognize(spark, sql, df=df).collect()))
-    pre = run_match_recognize(spark, sql, df=df, prefilter=True)
-    assert sorted(map(tuple, pre.collect())) == plain == [(1, 1), (3, 1)]
-    assert "LeftSemi" in pre._jdf.queryExecution().executedPlan().toString()
+
+    pdf = _mr_rows("aab")
+    sql = _MR_AB.format(skip="SKIP TO NEXT ROW")
+    batch = run_match_recognize(spark, sql, df=spark.createDataFrame(pdf))
+    assert sorted(r["n_a"] for r in batch.collect()) == [1, 2]
+    sdf = _mr_two_batch_stream(spark, tmp_path, pdf, 2)
+    with pytest.raises(ValueError, match="SKIP PAST LAST ROW only"):
+        run_match_recognize_stream(spark, sql, sdf)
+
+
+def test_mr_stream_match_number_and_classifier_match_batch(spark, tmp_path):
+    """A two-micro-batch drain numbers a key's matches on from the
+    earlier batch and reads CLASSIFIER() of the match's last row —
+    exactly the batch result over the same rows."""
+    import pandas as pd
+
+    from flink_1_12_0_spark.plans.match_recognize_sql import (
+        run_match_recognize,
+        run_match_recognize_stream,
+    )
+    from flink_1_12_0_spark.streaming.core import run_to_memory
+
+    pdf = pd.concat([_mr_rows("abaab", k=1), _mr_rows("aabab", k=2)],
+                    ignore_index=True)
+    sql = _MR_AB.format(skip="SKIP PAST LAST ROW")
+    cols = ["k", "mno", "cls", "n_a", "b_v"]
+    batch = sorted(map(tuple, run_match_recognize(
+        spark, sql, df=spark.createDataFrame(pdf)).select(*cols).collect()))
+    assert batch == [(1, 1, "B", 1, 1.0), (1, 2, "B", 2, 4.0),
+                     (2, 1, "B", 2, 2.0), (2, 2, "B", 1, 4.0)]
+    # key 2's second match arrives in the second micro-batch
+    sdf = _mr_two_batch_stream(spark, tmp_path, pdf, 8)
+    stream = run_to_memory(run_match_recognize_stream(spark, sql, sdf),
+                           output_mode="update")
+    assert sorted(map(tuple, stream.select(*cols).collect())) == batch
 
 
 def test_pair_miners_join_on_lsh_buckets(_loaded, spark):

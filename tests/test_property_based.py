@@ -260,6 +260,112 @@ def test_cep_regex_path_matches_nfa(s, pi, gaps, within, am, rpm):
     assert fast == slow, f"s={s!r} spec={spec} within={within} am={am} rpm={rpm}"
 
 
+def _diff_steps(spec, vec=True):
+    """Character-class steps over column ``c`` for a _DIFF_PATTERNS spec;
+    ``vec`` adds the vectorized mask each registered DEFINE carries."""
+    from flink_1_12_0_spark.operators.cep import Step
+
+    return [
+        Step(var, (lambda ch: lambda r: r["c"] == ch)(var), lo, hi, greedy=g,
+             where_vec=(lambda ch: lambda p: p["c"].eq(ch))(var) if vec else None)
+        for var, lo, hi, g in spec
+    ]
+
+
+def _diff_measures(spec):
+    names = list(dict.fromkeys(v for v, *_ in spec))
+    return [
+        (f"{v}_n", (lambda vv: lambda m: m.count(vv))(v)) for v in names
+    ] + [
+        (f"{v}_l", (lambda vv: lambda m: m.last(vv, "c"))(v)) for v in names
+    ] + [("mno", lambda m: m.match_no), ("cls", lambda m: m.classifier)]
+
+
+def _no_nan(rows):
+    """NULL keys read NaN from groupby and None from a column; compare
+    them as one value."""
+    return [
+        {c: None if isinstance(v, float) and v != v else v for c, v in r.items()}
+        for r in rows
+    ]
+
+
+@given(
+    s=st.text(alphabet="EPABVCx", min_size=30, max_size=30),
+    k1=st.lists(st.sampled_from([1.0, 2.0, None]), min_size=0, max_size=30),
+    k2=st.lists(st.sampled_from(["a", None]), min_size=30, max_size=30),
+    pi=st.integers(min_value=0, max_value=len(_DIFF_PATTERNS) - 1),
+    gaps=st.lists(st.integers(min_value=0, max_value=9), min_size=30, max_size=30),
+    within=st.sampled_from([None, 3.0, 10.0]),
+    am=st.sampled_from(["past_last_row", "next_row"]),
+    rpm=st.sampled_from(["one", "all"]),
+)
+@settings(max_examples=150, deadline=None)
+def test_cep_partition_scan_matches_per_key_nfa(s, k1, k2, pi, gaps, within, am, rpm):
+    """The whole-partition scan over a key-contiguous, time-sorted frame
+    (two key columns, NULL keys among them) emits exactly what the
+    per-key NFA scan emits, key group by key group, WITHIN and AFTER
+    MATCH variants and ALL ROWS PER MATCH included."""
+    from flink_1_12_0_spark.operators import cep
+
+    n = len(k1)
+    t = pd.Timestamp(2020, 1, 1) + pd.to_timedelta(
+        pd.Series(gaps[:n], dtype="int64").cumsum(), unit="s")
+    pdf = pd.DataFrame({"k1": pd.Series(k1, dtype="float64"),
+                        "k2": pd.Series(k2[:n], dtype="object"),
+                        "c": list(s[:n]), "ts": t})
+    # the JVM sort: keys NULLS FIRST, then time (stable, so ts ascends)
+    pdf = pdf.sort_values(["k1", "k2"], kind="mergesort", na_position="first")
+    pdf = pdf.reset_index(drop=True)
+    spec = _DIFF_PATTERNS[pi]
+    steps, measures = _diff_steps(spec), _diff_measures(spec)
+    data_cols = ("c",) if rpm == "all" else ()
+    got = cep._scan_partition(pdf, ["k1", "k2"], steps, within, "ts", am,
+                              measures, rpm, data_cols)
+    orig = cep._compile_regex
+    cep._compile_regex = lambda steps: None  # per-key reference: the NFA
+    try:
+        want = []
+        for key, g in pdf.groupby(["k1", "k2"], sort=False, dropna=False):
+            want.extend(cep._scan(g.reset_index(drop=True), steps, within, "ts",
+                                  am, measures, dict(zip(["k1", "k2"], key)),
+                                  rpm, data_cols))
+    finally:
+        cep._compile_regex = orig
+    assert (got is None) == pdf.empty
+    assert _no_nan(got or []) == _no_nan(want), (
+        f"s={s!r} spec={spec} within={within} am={am} rpm={rpm}")
+
+
+@given(
+    s=st.text(alphabet="EPABVCx", min_size=0, max_size=35),
+    pi=st.integers(min_value=0, max_value=len(_DIFF_PATTERNS) - 1),
+    gaps=st.lists(st.integers(min_value=0, max_value=9), min_size=35, max_size=35),
+    within=st.sampled_from([None, 3.0, 10.0]),
+    vec=st.booleans(),
+)
+@settings(max_examples=150, deadline=None)
+def test_cep_stream_regex_path_matches_nfa(s, pi, gaps, within, vec):
+    """The streaming buffer scan returns the same rows and the same
+    consumed index on its regex path as on the forced NFA."""
+    from flink_1_12_0_spark.operators import cep
+
+    t = pd.Timestamp(2020, 1, 1) + pd.to_timedelta(
+        pd.Series(gaps[:len(s)], dtype="int64").cumsum(), unit="s")
+    pdf = pd.DataFrame({"c": list(s), "ts": t})
+    spec = _DIFF_PATTERNS[pi]
+    steps, measures = _diff_steps(spec, vec), _diff_measures(spec)
+    key = {"k": 7}
+    fast = cep._stream_scan(pdf, steps, within, "ts", measures, key)
+    orig = cep._compile_regex
+    cep._compile_regex = lambda steps: None  # force the Python NFA
+    try:
+        slow = cep._stream_scan(pdf, steps, within, "ts", measures, key)
+    finally:
+        cep._compile_regex = orig
+    assert fast == slow, f"s={s!r} spec={spec} within={within} vec={vec}"
+
+
 # --- exact two-phase top-K (quota sampling / vocab build) --------------------
 # The scale rewrite used by text_source_quota_sample and
 # text_vocab_coverage: per-group top-K over an ORDER BY is computed as

@@ -235,9 +235,9 @@ def test_count_tumble_state_bounded_by_keys(spark, chunks):
 def test_cep_buffer_state_bounded_by_keys(spark, chunks):
     """Streaming MATCH_RECOGNIZE (the last stateful family without a
     receipt): the per-key NFA buffer — unmatched rows awaiting a pattern
-    completion — lives as typed arrays INSIDE the key's single state row,
-    matched prefixes are consumed, and rows older than WITHIN below the
-    key's max event time are pruned.  So state rows track KEYS, never the
+    completion — lives as a pickled pandas frame (with the key's match
+    count) INSIDE its shard's state row, matched prefixes are consumed,
+    and rows older than WITHIN below the key's max event time are pruned.  So state rows track KEYS, never the
     rows buffered in flight, and a SHORT horizon keeps the curve flat
     across batches instead of accreting the whole history."""
     from flink_1_12_0_spark.operators.cep import (
